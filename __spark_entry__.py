@@ -32,6 +32,8 @@ def vocab_from_docs(docs: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
     parallelism probe, and the vocab-boundary tests, so every surface times
     and checks the exact same physical plan.
     """
+    if vocab_size < 1:
+        raise ValueError(f"vocab_size must be >= 1, got {vocab_size!r}")
     words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
     # The partial_count HashAggregate below this groupBy (visible in the
     # committed plans) is the skew insurance for the hashpartitioning(word)
@@ -71,16 +73,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
+def vocab_oracle_sql(vocab_size: int) -> str:
+    """DuckDB SQL for ``vocab_from_docs`` over a ``documents`` view: it ranks
+    the whole vocabulary and then limits, the order the Spark plan reverses."""
+    return f"""
+        WITH toks AS (
+            SELECT unnest(string_split(text, ' ')) AS word FROM documents
+        ), wc AS (
+            SELECT word, COUNT(*) AS count FROM toks WHERE word <> '' GROUP BY word
+        )
+        SELECT word, count, ROW_NUMBER() OVER (ORDER BY count DESC, word ASC) - 1 AS id
+        FROM wc ORDER BY id LIMIT {vocab_size}
+    """
+
+
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL for each queries() entry."""
-    return {
-        "vocab_topv": f"""
-            WITH toks AS (
-                SELECT unnest(string_split(text, ' ')) AS word FROM documents
-            ), wc AS (
-                SELECT word, COUNT(*) AS count FROM toks WHERE word <> '' GROUP BY word
-            )
-            SELECT word, count, ROW_NUMBER() OVER (ORDER BY count DESC, word ASC) - 1 AS id
-            FROM wc ORDER BY id LIMIT {VOCAB_SIZE}
-        """,
-    }
+    return {"vocab_topv": vocab_oracle_sql(VOCAB_SIZE)}

@@ -22,7 +22,7 @@ Methodology (fixed across rounds so numbers stay comparable):
   log attributes time to the right query.
 
 Round-22 addition (additive only, per the driver contract "you may ADD
-entries to queries"): a synthetic parallelism probe, ``synth_vocab_500k``.
+entries to queries"): a synthetic parallelism probe, ``synth_vocab_80m``.
 The sf0.1 fixture is a single small parquet file — one scan task, 31
 distinct words — so the declared query cannot exercise parallelism at any
 driver-supplied SF (the r21 scaling ratio was 0.48: 8 cores *beat* 32).
@@ -42,12 +42,9 @@ import json
 import os
 import statistics
 import sys
-import time
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from sparklda.io import synth_docs, time_noop
 from sparklda.session import get_spark
 
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
@@ -61,28 +58,6 @@ RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 SYNTH = {"n_docs": 4_000_000, "words_per_doc": 20, "n_distinct": 100_000, "parts": 64}
 
 
-def synth_docs(
-    spark: SparkSession, n_docs: int, words_per_doc: int, n_distinct: int, parts: int
-) -> DataFrame:
-    """Deterministic synthetic corpus with a `text` column.
-
-    Built from ``spark.range`` + expressions only (no fixture, no files, no
-    rand()): word j of doc i is ``w<pmod(xxhash64(i*W+j), n_distinct)>``,
-    so the corpus is reproducible across runs, core counts and retries
-    (guide §2.5 warns against rand()-derived keys).
-    """
-    cols = [
-        F.concat(
-            F.lit("w"),
-            F.pmod(
-                F.xxhash64(F.col("id") * words_per_doc + j), F.lit(n_distinct)
-            ).cast("string"),
-        )
-        for j in range(words_per_doc)
-    ]
-    return spark.range(0, n_docs, 1, parts).select(F.concat_ws(" ", *cols).alias("text"))
-
-
 def _sf_from_dir(sf_dir: str) -> float | None:
     tail = os.path.basename(sf_dir.rstrip("/"))
     if tail.startswith("sf"):
@@ -91,12 +66,6 @@ def _sf_from_dir(sf_dir: str) -> float | None:
         except ValueError:
             return None
     return None
-
-
-def _time_noop(df) -> float:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
 
 
 def main() -> None:
@@ -108,11 +77,11 @@ def main() -> None:
         sc = spark.sparkContext
         sc.setJobDescription(f"bench:{name}:warmup")
         for _ in range(warmups):  # untimed; a fresh DataFrame every run
-            _time_noop(build())
+            time_noop(build())
         times = []
         for i in range(RUNS):
             sc.setJobDescription(f"bench:{name}:run{i}")
-            times.append(_time_noop(build()))
+            times.append(time_noop(build()))
         sc.setJobDescription(None)
         return round(statistics.median(times), 4)
 

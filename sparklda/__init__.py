@@ -1,18 +1,12 @@
-"""sparklda — a PySpark-native analytics engine with the query and
-data-processing capabilities of the reference LDA-TopicModeling-using-PySpark
-repo, re-expressed DataFrame/SQL/MLlib-first.
+"""sparklda — a PySpark-native rewrite of the reference LDA-TopicModeling-using-PySpark
+job, DataFrame-first.
 
-The reference (read-only at /root/reference/) is an RDD + driver-NumPy
-collapsed-Gibbs LDA job plus a pandas text-cleaning script. This engine
-reproduces the semantics (what is computed) with idiomatic Spark machinery
-(how it is computed): declarative DataFrame plans optimized by Catalyst,
-sparse long-format aggregates instead of dense one-hot shuffles, MLlib LDA
-instead of a driver-side Gibbs loop, and LSH instead of all-pairs similarity.
+Today the engine computes one declared query, ``vocab_topv`` (corpus ->
+tokens -> word counts -> deterministic top-V dictionary), defined in
+``__spark_entry__.py`` and checked against a DuckDB oracle.
 
 Modules
 -------
-session     SparkSession bootstrap (env-parameterised cores/shuffle partitions)
-io          Parquet/CSV readers with explicit schemas over the test tables
+session     SparkSession bootstrap (``local[$SPARK_GRAFT_CPUS]``)
+io          fixture reader, synthetic corpus and noop-sink timer
 """
-
-__version__ = "0.4.0"

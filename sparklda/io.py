@@ -1,111 +1,23 @@
-"""Table readers with explicit schemas (SURVEY.md 2.1 S4/S6).
+"""Fixture reader and the corpus and timing helpers the bench and tests share.
 
-The reference "parses" CSV with ``line.split(',')``
-(/root/reference/src/LDATopicModelingWithGibbs.py:31) — correct only because
-an upstream cleaner stripped every comma. This engine never relies on that
-cross-file invariant: all sources are real readers with explicit StructType
-schemas, so schema drift is an error instead of silent corruption, and
-Parquet (columnar, predicate-pushdown-friendly) is the at-rest format.
+The reference "parses" CSV with ``line.split(',')``, correct only because an
+upstream cleaner stripped every comma. This engine reads Parquet with an
+explicit StructType schema instead, so schema drift is an error rather than
+silent corruption.
 """
 
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 # Explicit schemas: reads fail loudly on drift, and the reader never pays an
-# inference pass. Names/types match the driver-generated fixtures (TESTDATA.md).
+# inference pass. Names/types match the fixtures described in TESTDATA.md.
 SCHEMAS: dict[str, T.StructType] = {
-    "region": T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType()),
-            T.StructField("r_name", T.StringType()),
-        ]
-    ),
-    "nation": T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    ),
-    "customer": T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("c_name", T.StringType()),
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-            T.StructField("c_mktsegment", T.StringType()),
-        ]
-    ),
-    "supplier": T.StructType(
-        [
-            T.StructField("s_suppkey", T.LongType()),
-            T.StructField("s_name", T.StringType()),
-            T.StructField("s_nationkey", T.IntegerType()),
-            T.StructField("s_acctbal", T.DoubleType()),
-        ]
-    ),
-    "part": T.StructType(
-        [
-            T.StructField("p_partkey", T.LongType()),
-            T.StructField("p_name", T.StringType()),
-            T.StructField("p_brand", T.StringType()),
-            T.StructField("p_type", T.StringType()),
-            T.StructField("p_size", T.IntegerType()),
-            T.StructField("p_retailprice", T.DoubleType()),
-        ]
-    ),
-    "orders": T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_orderstatus", T.StringType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_orderpriority", T.StringType()),
-        ]
-    ),
-    "lineitem": T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType()),
-            T.StructField("l_partkey", T.LongType()),
-            T.StructField("l_suppkey", T.LongType()),
-            T.StructField("l_linenumber", T.IntegerType()),
-            T.StructField("l_quantity", T.DoubleType()),
-            T.StructField("l_extendedprice", T.DoubleType()),
-            T.StructField("l_discount", T.DoubleType()),
-            T.StructField("l_tax", T.DoubleType()),
-            T.StructField("l_returnflag", T.StringType()),
-            T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
-        ]
-    ),
-    "events": T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    ),
     "documents": T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -115,19 +27,10 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("n_chars", T.LongType()),
         ]
     ),
-    "embeddings": T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    ),
 }
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-
-def read_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+def read_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Read one fixture table as a DataFrame with its declared schema."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(SCHEMAS)}")
@@ -135,33 +38,30 @@ def read_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
-def read_documents_csv(spark: SparkSession, path: str) -> DataFrame:
-    """CSV corpus reader replacing the reference's S6/S7 textFile+split
-    (/root/reference/src/LDATopicModelingWithGibbs.py:28-31): a real CSV
-    parser with explicit schema instead of str.split(',')."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    return spark.read.schema(schema).option("header", "false").csv(path)
+def synth_docs(
+    spark: SparkSession, n_docs: int, words_per_doc: int, n_distinct: int, parts: int
+) -> DataFrame:
+    """Deterministic synthetic corpus with a `text` column.
 
-
-def write_csv(df: DataFrame, path: str, header: bool = False, mode: str = "overwrite") -> None:
-    """CSV sink (SURVEY.md 2.1 S3/S5): distributed writer, one file per
-    partition — no driver-side csv.writer loop."""
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    """Preferred sink at scale: columnar, splittable, stats for pruning.
-
-    zstd codec per the optimization guide §6: markedly smaller files than
-    the snappy default at similar read speed, so every downstream scan of
-    anything this engine writes reads fewer bytes.
+    Built from ``spark.range`` + expressions only (no fixture, no files, no
+    rand()): word j of doc i is ``w<pmod(xxhash64(i*W+j), n_distinct)>``,
+    so the corpus is reproducible across runs, core counts and retries,
+    which rand()-derived words would not be.
     """
-    w = df.write.mode(mode).option("compression", "zstd")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    cols = [
+        F.concat(
+            F.lit("w"),
+            F.pmod(
+                F.xxhash64(F.col("id") * words_per_doc + j), F.lit(n_distinct)
+            ).cast("string"),
+        )
+        for j in range(words_per_doc)
+    ]
+    return spark.range(0, n_docs, 1, parts).select(F.concat_ws(" ", *cols).alias("text"))
+
+
+def time_noop(df: DataFrame) -> float:
+    """Seconds to compute every row of ``df`` into the noop sink, which discards them."""
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0

@@ -1,11 +1,4 @@
-"""SparkSession bootstrap.
-
-Local testing runs a single JVM with many threads; the config below is
-nevertheless written for a real multi-executor cluster: AQE handles runtime
-partition coalescing and skew joins, shuffle partitions default to a
-cluster-ish value that AQE then shrinks, and Arrow is enabled so any
-pandas-UDF path is batch-vectorized rather than row-at-a-time pickled.
-"""
+"""SparkSession bootstrap: ``local[$SPARK_GRAFT_CPUS]``, Spark's defaults otherwise."""
 
 from __future__ import annotations
 
@@ -14,49 +7,18 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "sparklda", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or fetch) a SparkSession tuned for this engine.
+def get_spark(app_name: str = "sparklda") -> SparkSession:
+    """Build (or fetch) the engine's local SparkSession.
 
-    Scale stance (100 TB): every knob here is either scale-neutral or
-    explicitly an at-scale win — AQE coalescing/skew handling, broadcast
-    threshold for small dims, Arrow for the few Python-side operators.
+    ``spark.driver.memory`` is set explicitly: in local mode it is the heap
+    every task runs in, and reading the key back raises ``SQL_CONF_NOT_FOUND``
+    when it was never set. The UI is off; nothing serves it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        # Scale-adaptive, not tuned to the local core count: start from
-        # Spark's default 200 (overridable per deployment via env) and let
-        # AQE coalesce small post-shuffle partitions down at runtime. On a
-        # cluster this is raised via SPARK_GRAFT_SHUFFLE_PARTITIONS to
-        # ~(total shuffle bytes / 128MB); locally AQE collapses the tiny
-        # shuffles to a handful of partitions either way.
-        env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env_sp is None:
-            shuffle_partitions = 200
-        else:
-            # Fail loudly on invalid input: a silent fallback (or a value
-            # Spark rejects only at job time, like 0) hides a misconfigured
-            # deployment behind default behaviour.
-            try:
-                shuffle_partitions = int(env_sp)
-            except ValueError:
-                raise ValueError(
-                    f"SPARK_GRAFT_SHUFFLE_PARTITIONS={env_sp!r} is not an integer"
-                ) from None
-            if shuffle_partitions < 1:
-                raise ValueError(
-                    f"SPARK_GRAFT_SHUFFLE_PARTITIONS must be >= 1, got {env_sp!r}"
-                )
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    return builder.getOrCreate()

@@ -19,15 +19,13 @@ reproduces the numbers:
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 import __spark_entry__ as entry_mod
-from bench import synth_docs
-from sparklda.session import get_spark
+from sparklda.io import synth_docs, time_noop
 
 # >= 1M distinct keys per the round-21 verdict; ~10M tokens keeps the shared
 # wordcount cost small relative to the single-task sort the old plan pays.
@@ -36,13 +34,6 @@ V = 10_000
 # Conservative vs the ~3x measured locally (cold-JIT variance is 2-4x on
 # this sandbox); the asymptotic gap only grows with vocabulary size.
 MIN_SPEEDUP = 1.5
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = get_spark("sparklda-scale-demo")
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
 
 
 def r20_fullwindow(docs, v):
@@ -62,24 +53,12 @@ def r20_fullwindow(docs, v):
     )
 
 
-def _plan(spark, df):
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
-def _time_noop(df) -> float:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
-def test_plan_shapes_old_vs_new(spark):
+def test_plan_shapes_old_vs_new(spark, formatted_plan):
     """Cheap, always-on: the old shape really is the scale-killer plan and
     the new shape really avoids it, on the same synthetic input."""
     docs = synth_docs(spark, 1000, 5, 100, 4)
-    old_plan = _plan(spark, r20_fullwindow(docs, V))
-    new_plan = _plan(spark, entry_mod.vocab_from_docs(docs, V))
+    old_plan = formatted_plan(r20_fullwindow(docs, V))
+    new_plan = formatted_plan(entry_mod.vocab_from_docs(docs, V))
     assert "SinglePartition" in old_plan, old_plan
     assert "SinglePartition" not in new_plan, new_plan
     assert "TakeOrderedAndProject" in new_plan, new_plan
@@ -105,12 +84,12 @@ def test_takeordered_beats_fullwindow_at_scale(spark):
     # than one pass (first timed run is otherwise 2-4x the steady state).
     for tag, build in (("new", build_new), ("old", build_old)):
         sc.setJobDescription(f"scale-demo:{tag}:warmup")
-        _time_noop(build())
-        _time_noop(build())
+        time_noop(build())
+        time_noop(build())
     sc.setJobDescription("scale-demo:new:timed")
-    new_times = [_time_noop(build_new()) for _ in range(3)]
+    new_times = [time_noop(build_new()) for _ in range(3)]
     sc.setJobDescription("scale-demo:old:timed")
-    old_times = [_time_noop(build_old()) for _ in range(3)]
+    old_times = [time_noop(build_old()) for _ in range(3)]
     sc.setJobDescription(None)
 
     new_best, old_best = min(new_times), min(old_times)

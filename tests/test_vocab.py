@@ -7,25 +7,22 @@ single-partition rank, so the window never sees more than VOCAB_SIZE rows.
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import duckdb
 import pytest
+from pyspark.testing import assertDataFrameEqual
 
 import __spark_entry__ as entry_mod
-from sparklda.session import get_spark
+from sparklda.io import read_table
 
 SF_DIR = "/root/testdata/sf0.001"
+PLAN_SNAPSHOT = Path(__file__).resolve().parent.parent / "plans/r22/vocab_topv_after.txt"
 
 
-@pytest.fixture(scope="session")
-def spark():
-    s = get_spark("sparklda-tests")
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-
-
-def _spark_rows(spark):
-    df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
-    return sorted(tuple(r) for r in df.collect())
+def _vocab_topv(spark):
+    return entry_mod.queries()["vocab_topv"](spark, SF_DIR)
 
 
 def test_vocab_topv_matches_duckdb_oracle(spark):
@@ -33,18 +30,16 @@ def test_vocab_topv_matches_duckdb_oracle(spark):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
     )
-    oracle = sorted(
-        tuple(r) for r in con.execute(entry_mod.oracle_sql()["vocab_topv"]).fetchall()
-    )
-    assert _spark_rows(spark) == oracle
+    oracle = con.execute(entry_mod.oracle_sql()["vocab_topv"]).fetchall()
+    assertDataFrameEqual(_vocab_topv(spark), oracle)
 
 
 def test_vocab_topv_deterministic(spark):
-    assert _spark_rows(spark) == _spark_rows(spark)
+    assertDataFrameEqual(_vocab_topv(spark), _vocab_topv(spark))
 
 
 def test_vocab_topv_schema(spark):
-    df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
+    df = _vocab_topv(spark)
     assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
         ("word", "string"),
         ("count", "bigint"),
@@ -52,18 +47,37 @@ def test_vocab_topv_schema(spark):
     ]
 
 
-def _formatted_plan(spark, df):
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+@pytest.mark.parametrize("vocab_size", [0, -1])
+def test_vocab_from_docs_rejects_vocab_size_below_one(spark, vocab_size):
+    """0 used to return no rows silently and -1 to fail inside Spark's analyzer."""
+    docs = read_table(spark, "documents", SF_DIR)
+    with pytest.raises(ValueError, match="vocab_size"):
+        entry_mod.vocab_from_docs(docs, vocab_size)
 
 
-def test_vocab_topv_plan_is_scale_safe(spark):
+def _normalize_plan(text):
+    """Drop what changes between runs and machines: comment headers, the
+    scan's file location, expression ids and exchange plan ids."""
+    lines = [
+        ln
+        for ln in text.strip().splitlines()
+        if not ln.startswith("--") and not ln.startswith("Location:")
+    ]
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", "\n".join(lines)))
+
+
+def test_vocab_topv_plan_matches_snapshot(formatted_plan, spark):
+    """The whole physical plan, including what the substring guards below do
+    not pin, such as the 200-way hashpartitioning(word) Exchange."""
+    plan = formatted_plan(_vocab_topv(spark))
+    assert _normalize_plan(plan) == _normalize_plan(PLAN_SNAPSHOT.read_text())
+
+
+def test_vocab_topv_plan_is_scale_safe(formatted_plan, spark):
     """The r21 optimization contract: one shuffle total (the groupBy), a
     distributed TakeOrderedAndProject for top-V, and no SinglePartition
     exchange dragging the full vocabulary through one task."""
-    df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(_vocab_topv(spark))
     assert "TakeOrderedAndProject" in plan
     assert "SinglePartition" not in plan
     n_exchange = sum(
@@ -74,22 +88,20 @@ def test_vocab_topv_plan_is_scale_safe(spark):
     assert n_exchange == 1, plan
 
 
-def test_vocab_topv_scan_prunes_to_text(spark):
+def test_vocab_topv_scan_prunes_to_text(formatted_plan, spark):
     """Column pruning must reach the parquet scan (guide §6): the documents
     table has 5 columns, the query needs only `text`. A refactor that widens
     ReadSchema silently quintuples scan bytes at 100 TB."""
-    df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(_vocab_topv(spark))
     assert "ReadSchema: struct<text:string>" in plan, plan
 
 
-def test_vocab_topv_partial_agg_precedes_shuffle(spark):
+def test_vocab_topv_partial_agg_precedes_shuffle(formatted_plan, spark):
     """Skew insurance (guide §2.5): the map-side partial_count HashAggregate
     must sit below the hashpartitioning(word) Exchange, so each map task
     ships at most one row per distinct word — the Zipfian-head word can
     contribute <= #map-tasks shuffle rows, never its corpus frequency."""
-    df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(_vocab_topv(spark))
     i_partial = plan.index("partial_count")
     i_exchange = plan.index("hashpartitioning(word")
     # In `formatted` output, operator detail blocks appear bottom-up in
@@ -118,24 +130,12 @@ def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
     pq = str(tmp_path / "docs.parquet")
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(pq)
 
-    docs = spark.read.parquet(pq)
-    srows = sorted(tuple(r) for r in entry_mod.vocab_from_docs(docs, v).collect())
-
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}/*.parquet'")
-    oracle = f"""
-        WITH toks AS (
-            SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        ), wc AS (
-            SELECT word, COUNT(*) AS count FROM toks WHERE word <> '' GROUP BY word
-        )
-        SELECT word, count, ROW_NUMBER() OVER (ORDER BY count DESC, word ASC) - 1 AS id
-        FROM wc ORDER BY id LIMIT {v}
-    """
-    orows = sorted(tuple(r) for r in con.execute(oracle).fetchall())
-    assert len(srows) == v
-    assert srows == orows
+    oracle = con.execute(entry_mod.vocab_oracle_sql(v)).fetchall()
+    assert len(oracle) == v
+    assertDataFrameEqual(entry_mod.vocab_from_docs(spark.read.parquet(pq), v), oracle)
     # the cutoff row really is inside the tie group (tie_a..tie_e kept,
     # tie_f.. dropped by word ASC) — i.e. the boundary was exercised
-    kept = {w for w, _, _ in srows}
+    kept = {w for w, _, _ in oracle}
     assert "tie_e" in kept and "tie_f" not in kept
