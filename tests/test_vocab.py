@@ -15,7 +15,7 @@ import pytest
 from pyspark.testing import assertDataFrameEqual
 
 import __spark_entry__ as entry_mod
-from sparklda.io import read_table
+from sparklda.io import read_table, synth_docs
 
 SF_DIR = "/root/testdata/sf0.001"
 PLAN_SNAPSHOT = Path(__file__).resolve().parent.parent / "plans/r22/vocab_topv_after.txt"
@@ -23,6 +23,19 @@ PLAN_SNAPSHOT = Path(__file__).resolve().parent.parent / "plans/r22/vocab_topv_a
 
 def _vocab_topv(spark):
     return entry_mod.queries()["vocab_topv"](spark, SF_DIR)
+
+
+def _shuffle_exchanges(df):
+    """The ShuffleExchangeExec nodes of ``df``'s physical plan before AQE runs it."""
+
+    def walk(node):
+        yield node
+        children = node.children()
+        for i in range(children.size()):
+            yield from walk(children.apply(i))
+
+    plan = df._jdf.queryExecution().executedPlan().initialPlan()
+    return [n for n in walk(plan) if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
 
 
 def test_vocab_topv_matches_duckdb_oracle(spark):
@@ -88,6 +101,23 @@ def test_vocab_topv_plan_is_scale_safe(formatted_plan, spark):
     assert n_exchange == 1, plan
 
 
+def test_vocab_topv_shuffle_uses_serialized_writer(spark):
+    """The writer choice is not in any plan text: it is the exchange's shuffle
+    handle. With Spark's default bypassMergeThreshold the 200-way exchange
+    gets a BypassMergeSortShuffleHandle, one file writer per reduce
+    partition in every map task."""
+    (exchange,) = _shuffle_exchanges(_vocab_topv(spark))
+    handle = exchange.shuffleDependency().shuffleHandle()
+    assert handle.getClass().getSimpleName() == "SerializedShuffleHandle"
+
+
+def test_memory_pages_stay_below_g1_humongous_size(spark):
+    """The writer buffers records in memory pages; on the 8 GB heap (4 MB G1
+    regions) a page of 2 MB or more is a humongous object, which can start a
+    concurrent mark cycle per query."""
+    assert spark.sparkContext._jsc.sc().env().memoryManager().pageSizeBytes() == 1 << 20
+
+
 def test_vocab_topv_scan_prunes_to_text(formatted_plan, spark):
     """Column pruning must reach the parquet scan (guide §6): the documents
     table has 5 columns, the query needs only `text`. A refactor that widens
@@ -139,3 +169,30 @@ def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
     # tie_f.. dropped by word ASC) — i.e. the boundary was exercised
     kept = {w for w, _, _ in oracle}
     assert "tie_e" in kept and "tie_f" not in kept
+
+
+def test_vocab_independent_of_shuffle_width(spark, tmp_path):
+    """Same rows as DuckDB whatever the exchange width: 1, 3 (the input
+    partition count) and 200 (the default) reduce partitions, on a corpus
+    with many more distinct words than V and count ties at the cutoff."""
+    v = 100
+    pq = str(tmp_path / "docs.parquet")
+    synth_docs(spark, n_docs=300, words_per_doc=10, n_distinct=500, parts=3).write.parquet(pq)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}/*.parquet'")
+    oracle = con.execute(entry_mod.vocab_oracle_sql(v)).fetchall()
+    assert len(oracle) == v
+    # the first word past the cutoff ties with the last one kept
+    assert con.execute(entry_mod.vocab_oracle_sql(v + 1)).fetchall()[-1][1] == oracle[-1][1]
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        for width in (1, 3, 200):
+            spark.conf.set(key, str(width))
+            df = entry_mod.vocab_from_docs(spark.read.parquet(pq), v)
+            (exchange,) = _shuffle_exchanges(df)
+            assert exchange.outputPartitioning().numPartitions() == width
+            assertDataFrameEqual(df, oracle)
+    finally:
+        spark.conf.set(key, saved)
