@@ -32,8 +32,8 @@ def vocab_from_docs(docs: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
     parallelism probe, and the vocab-boundary tests, so every surface times
     and checks the exact same physical plan.
     """
-    if vocab_size < 1:
-        raise ValueError(f"vocab_size must be >= 1, got {vocab_size!r}")
+    if isinstance(vocab_size, bool) or not isinstance(vocab_size, int) or vocab_size < 1:
+        raise ValueError(f"vocab_size must be an int >= 1, got {vocab_size!r}")
     words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
     # The partial_count HashAggregate below this groupBy (visible in the
     # committed plans) is the skew insurance for the hashpartitioning(word)

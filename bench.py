@@ -17,9 +17,7 @@ Methodology (fixed across rounds so numbers stay comparable):
 * ``value`` is the sum of the per-query medians **of the declared queries
   only** — byte-compatible with the round-21 definition, where the declared
   set was the whole ``queries`` dict, so totals stay comparable across
-  rounds;
-* each run is labelled with ``setJobDescription`` so the Spark UI/event
-  log attributes time to the right query.
+  rounds.
 
 Round-22 addition (additive only, per the driver contract "you may ADD
 entries to queries"): a synthetic parallelism probe, ``synth_vocab_80m``.
@@ -73,26 +71,18 @@ def main() -> None:
     spark = get_spark("sparklda-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def bench_one(name: str, build, warmups: int = 1) -> float:
-        sc = spark.sparkContext
-        sc.setJobDescription(f"bench:{name}:warmup")
+    def bench_one(build, warmups: int = 1) -> float:
         for _ in range(warmups):  # untimed; a fresh DataFrame every run
             time_noop(build())
-        times = []
-        for i in range(RUNS):
-            sc.setJobDescription(f"bench:{name}:run{i}")
-            times.append(time_noop(build()))
-        sc.setJobDescription(None)
-        return round(statistics.median(times), 4)
+        return round(statistics.median(time_noop(build()) for _ in range(RUNS)), 4)
 
     per_query: dict[str, float] = {}
     for name, fn in entry_mod.queries().items():
-        per_query[name] = bench_one(name, lambda: fn(spark, sf_dir))
+        per_query[name] = bench_one(lambda: fn(spark, sf_dir))
     value = round(sum(per_query.values()), 4)  # declared queries only
 
     # Additive parallelism probe (see module docstring); not part of `value`.
     per_query["synth_vocab_80m"] = bench_one(
-        "synth_vocab_80m",
         lambda: entry_mod.vocab_from_docs(synth_docs(spark, **SYNTH)),
         warmups=2,
     )

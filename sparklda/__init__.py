@@ -9,4 +9,6 @@ Modules
 -------
 session     SparkSession bootstrap (``local[$SPARK_GRAFT_CPUS]``)
 io          fixture reader, synthetic corpus and noop-sink timer
+plan        normalized plan text, plan operator nodes, and the snapshot
+            tool ``python -m sparklda.plan SF_DIR`` (imported only by tests)
 """

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 
 import __spark_entry__ as entry_mod
 from sparklda.io import synth_docs, time_noop
+from sparklda.plan import plan_text
 
 # >= 1M distinct keys per the round-21 verdict; ~10M tokens keeps the shared
 # wordcount cost small relative to the single-task sort the old plan pays.
@@ -53,12 +54,12 @@ def r20_fullwindow(docs, v):
     )
 
 
-def test_plan_shapes_old_vs_new(spark, formatted_plan):
+def test_plan_shapes_old_vs_new(spark):
     """Cheap, always-on: the old shape really is the scale-killer plan and
     the new shape really avoids it, on the same synthetic input."""
     docs = synth_docs(spark, 1000, 5, 100, 4)
-    old_plan = formatted_plan(r20_fullwindow(docs, V))
-    new_plan = formatted_plan(entry_mod.vocab_from_docs(docs, V))
+    old_plan = plan_text(r20_fullwindow(docs, V))
+    new_plan = plan_text(entry_mod.vocab_from_docs(docs, V))
     assert "SinglePartition" in old_plan, old_plan
     assert "SinglePartition" not in new_plan, new_plan
     assert "TakeOrderedAndProject" in new_plan, new_plan
@@ -79,18 +80,13 @@ def test_takeordered_beats_fullwindow_at_scale(spark):
             synth_docs(spark, N_DOCS, WORDS_PER_DOC, N_DISTINCT, PARTS), V
         )
 
-    sc = spark.sparkContext
     # Two warmups per path: JIT on this synthetic expression tree needs more
     # than one pass (first timed run is otherwise 2-4x the steady state).
-    for tag, build in (("new", build_new), ("old", build_old)):
-        sc.setJobDescription(f"scale-demo:{tag}:warmup")
+    for build in (build_new, build_old):
         time_noop(build())
         time_noop(build())
-    sc.setJobDescription("scale-demo:new:timed")
     new_times = [time_noop(build_new()) for _ in range(3)]
-    sc.setJobDescription("scale-demo:old:timed")
     old_times = [time_noop(build_old()) for _ in range(3)]
-    sc.setJobDescription(None)
 
     new_best, old_best = min(new_times), min(old_times)
     print(

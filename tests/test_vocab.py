@@ -7,43 +7,35 @@ single-partition rank, so the window never sees more than VOCAB_SIZE rows.
 
 from __future__ import annotations
 
-import re
-from pathlib import Path
-
 import duckdb
 import pytest
 from pyspark.testing import assertDataFrameEqual
 
 import __spark_entry__ as entry_mod
 from sparklda.io import read_table, synth_docs
+from sparklda.plan import PLANS_DIR, plan_nodes, plan_text
 
 SF_DIR = "/root/testdata/sf0.001"
-PLAN_SNAPSHOT = Path(__file__).resolve().parent.parent / "plans/r22/vocab_topv_after.txt"
 
 
 def _vocab_topv(spark):
     return entry_mod.queries()["vocab_topv"](spark, SF_DIR)
 
 
-def _shuffle_exchanges(df):
-    """The ShuffleExchangeExec nodes of ``df``'s physical plan before AQE runs it."""
+def _duckdb_vocab(parquet_glob, v):
+    """DuckDB's rows for ``vocab_oracle_sql(v)`` over the ``documents`` in ``parquet_glob``."""
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{parquet_glob}'")
+    return con.execute(entry_mod.vocab_oracle_sql(v)).fetchall()
 
-    def walk(node):
-        yield node
-        children = node.children()
-        for i in range(children.size()):
-            yield from walk(children.apply(i))
 
-    plan = df._jdf.queryExecution().executedPlan().initialPlan()
-    return [n for n in walk(plan) if n.getClass().getSimpleName() == "ShuffleExchangeExec"]
+def _exchanges(df):
+    """The shuffle exchanges of ``df``'s physical plan."""
+    return [n for n in plan_nodes(df) if n.nodeName() == "Exchange"]
 
 
 def test_vocab_topv_matches_duckdb_oracle(spark):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
-    )
-    oracle = con.execute(entry_mod.oracle_sql()["vocab_topv"]).fetchall()
+    oracle = _duckdb_vocab(f"{SF_DIR}/documents.parquet", entry_mod.VOCAB_SIZE)
     assertDataFrameEqual(_vocab_topv(spark), oracle)
 
 
@@ -60,45 +52,31 @@ def test_vocab_topv_schema(spark):
     ]
 
 
-@pytest.mark.parametrize("vocab_size", [0, -1])
+@pytest.mark.parametrize("vocab_size", [0, -1, 2.5, True, "10"])
 def test_vocab_from_docs_rejects_vocab_size_below_one(spark, vocab_size):
-    """0 used to return no rows silently and -1 to fail inside Spark's analyzer."""
+    """0 used to return no rows silently, -1 to fail inside Spark's analyzer,
+    2.5 and True to fail inside ``limit`` as a Py4JError, and "10" with a bare
+    TypeError from ``<``."""
     docs = read_table(spark, "documents", SF_DIR)
     with pytest.raises(ValueError, match="vocab_size"):
         entry_mod.vocab_from_docs(docs, vocab_size)
 
 
-def _normalize_plan(text):
-    """Drop what changes between runs and machines: comment headers, the
-    scan's file location, expression ids and exchange plan ids."""
-    lines = [
-        ln
-        for ln in text.strip().splitlines()
-        if not ln.startswith("--") and not ln.startswith("Location:")
-    ]
-    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", "\n".join(lines)))
+def test_vocab_topv_plan_matches_snapshot(spark):
+    """The whole physical plan, including what the operator guards below do
+    not pin, such as the 200-way hashpartitioning(word) Exchange. Regenerate
+    the snapshot with ``python -m sparklda.plan SF_DIR``."""
+    assert plan_text(_vocab_topv(spark)) == (PLANS_DIR / "vocab_topv.txt").read_text()
 
 
-def test_vocab_topv_plan_matches_snapshot(formatted_plan, spark):
-    """The whole physical plan, including what the substring guards below do
-    not pin, such as the 200-way hashpartitioning(word) Exchange."""
-    plan = formatted_plan(_vocab_topv(spark))
-    assert _normalize_plan(plan) == _normalize_plan(PLAN_SNAPSHOT.read_text())
-
-
-def test_vocab_topv_plan_is_scale_safe(formatted_plan, spark):
-    """The r21 optimization contract: one shuffle total (the groupBy), a
-    distributed TakeOrderedAndProject for top-V, and no SinglePartition
-    exchange dragging the full vocabulary through one task."""
-    plan = formatted_plan(_vocab_topv(spark))
-    assert "TakeOrderedAndProject" in plan
-    assert "SinglePartition" not in plan
-    n_exchange = sum(
-        1
-        for ln in plan.splitlines()
-        if ln.strip().startswith("(") and "Exchange" in ln
-    )
-    assert n_exchange == 1, plan
+def test_vocab_topv_plan_is_scale_safe(spark):
+    """The r21 optimization contract: one shuffle total (the groupBy's hash
+    exchange, so no SinglePartition exchange drags the full vocabulary
+    through one task) and a distributed TakeOrderedAndProject for top-V."""
+    df = _vocab_topv(spark)
+    (exchange,) = _exchanges(df)
+    assert exchange.outputPartitioning().getClass().getSimpleName() == "HashPartitioning"
+    assert "TakeOrderedAndProject" in [n.nodeName() for n in plan_nodes(df)]
 
 
 def test_vocab_topv_shuffle_uses_serialized_writer(spark):
@@ -106,7 +84,7 @@ def test_vocab_topv_shuffle_uses_serialized_writer(spark):
     handle. With Spark's default bypassMergeThreshold the 200-way exchange
     gets a BypassMergeSortShuffleHandle, one file writer per reduce
     partition in every map task."""
-    (exchange,) = _shuffle_exchanges(_vocab_topv(spark))
+    (exchange,) = _exchanges(_vocab_topv(spark))
     handle = exchange.shuffleDependency().shuffleHandle()
     assert handle.getClass().getSimpleName() == "SerializedShuffleHandle"
 
@@ -118,26 +96,25 @@ def test_memory_pages_stay_below_g1_humongous_size(spark):
     assert spark.sparkContext._jsc.sc().env().memoryManager().pageSizeBytes() == 1 << 20
 
 
-def test_vocab_topv_scan_prunes_to_text(formatted_plan, spark):
+def test_vocab_topv_scan_prunes_to_text(spark):
     """Column pruning must reach the parquet scan (guide §6): the documents
     table has 5 columns, the query needs only `text`. A refactor that widens
     ReadSchema silently quintuples scan bytes at 100 TB."""
-    plan = formatted_plan(_vocab_topv(spark))
-    assert "ReadSchema: struct<text:string>" in plan, plan
+    # Spark's nodeName for a file scan ends in a space.
+    (scan,) = [n for n in plan_nodes(_vocab_topv(spark)) if n.nodeName() == "Scan parquet "]
+    assert scan.requiredSchema().simpleString() == "struct<text:string>"
 
 
-def test_vocab_topv_partial_agg_precedes_shuffle(formatted_plan, spark):
+def test_vocab_topv_partial_agg_precedes_shuffle(spark):
     """Skew insurance (guide §2.5): the map-side partial_count HashAggregate
-    must sit below the hashpartitioning(word) Exchange, so each map task
-    ships at most one row per distinct word — the Zipfian-head word can
-    contribute <= #map-tasks shuffle rows, never its corpus frequency."""
-    plan = formatted_plan(_vocab_topv(spark))
-    i_partial = plan.index("partial_count")
-    i_exchange = plan.index("hashpartitioning(word")
-    # In `formatted` output, operator detail blocks appear bottom-up in
-    # execution order, so the partial aggregate's block precedes the
-    # Exchange's block iff it executes first (feeds the shuffle).
-    assert i_partial < i_exchange, plan
+    must feed the hashpartitioning(word) Exchange, so each map task ships at
+    most one row per distinct word — the Zipfian-head word can contribute
+    <= #map-tasks shuffle rows, never its corpus frequency."""
+    (exchange,) = _exchanges(_vocab_topv(spark))
+    agg = exchange.child()
+    assert agg.nodeName() == "HashAggregate"
+    exprs = agg.aggregateExpressions()
+    assert [exprs.apply(i).mode().toString() for i in range(exprs.size())] == ["Partial"]
 
 
 def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
@@ -160,9 +137,7 @@ def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
     pq = str(tmp_path / "docs.parquet")
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(pq)
 
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}/*.parquet'")
-    oracle = con.execute(entry_mod.vocab_oracle_sql(v)).fetchall()
+    oracle = _duckdb_vocab(f"{pq}/*.parquet", v)
     assert len(oracle) == v
     assertDataFrameEqual(entry_mod.vocab_from_docs(spark.read.parquet(pq), v), oracle)
     # the cutoff row really is inside the tie group (tie_a..tie_e kept,
@@ -172,27 +147,46 @@ def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
 
 
 def test_vocab_independent_of_shuffle_width(spark, tmp_path):
-    """Same rows as DuckDB whatever the exchange width: 1, 3 (the input
-    partition count) and 200 (the default) reduce partitions, on a corpus
-    with many more distinct words than V and count ties at the cutoff."""
+    """Same rows as DuckDB whatever the input partition count (1, 3, 64) and
+    exchange width: 1, 3 and 200 (the default) reduce partitions, on a
+    corpus with many more distinct words than V and count ties at the cutoff."""
     v = 100
+
+    def docs(parts):
+        # the words depend only on the row id, so every partitioning holds the same rows
+        return synth_docs(spark, n_docs=300, words_per_doc=10, n_distinct=500, parts=parts)
+
     pq = str(tmp_path / "docs.parquet")
-    synth_docs(spark, n_docs=300, words_per_doc=10, n_distinct=500, parts=3).write.parquet(pq)
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}/*.parquet'")
-    oracle = con.execute(entry_mod.vocab_oracle_sql(v)).fetchall()
+    docs(3).write.parquet(pq)
+    oracle = _duckdb_vocab(f"{pq}/*.parquet", v)
     assert len(oracle) == v
     # the first word past the cutoff ties with the last one kept
-    assert con.execute(entry_mod.vocab_oracle_sql(v + 1)).fetchall()[-1][1] == oracle[-1][1]
+    assert _duckdb_vocab(f"{pq}/*.parquet", v + 1)[-1][1] == oracle[-1][1]
 
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     try:
-        for width in (1, 3, 200):
-            spark.conf.set(key, str(width))
-            df = entry_mod.vocab_from_docs(spark.read.parquet(pq), v)
-            (exchange,) = _shuffle_exchanges(df)
-            assert exchange.outputPartitioning().numPartitions() == width
-            assertDataFrameEqual(df, oracle)
+        for parts in (1, 3, 64):
+            for width in (1, 3, 200):
+                spark.conf.set(key, str(width))
+                df = entry_mod.vocab_from_docs(docs(parts), v)
+                # one input partition already groups every word, so Spark plans no shuffle
+                widths = [e.outputPartitioning().numPartitions() for e in _exchanges(df)]
+                assert widths == ([width] if parts > 1 else [])
+                assertDataFrameEqual(df, oracle)
     finally:
         spark.conf.set(key, saved)
+
+
+ODD_TEXT = [None, "", "   ", "a  b", " a", "b ", "  a b  ", "a\tb", "\tA", "A a B b"]
+
+
+@pytest.mark.parametrize("texts", [ODD_TEXT, []], ids=["odd-text", "empty-corpus"])
+def test_vocab_odd_text_matches_oracle(spark, tmp_path, texts):
+    """Null, empty and all-space text, double, leading and trailing spaces,
+    tabs (not separators) and mixed case (kept apart), and a corpus with no
+    documents: Spark's rows are DuckDB's."""
+    pq = str(tmp_path / "docs.parquet")
+    spark.createDataFrame([(t,) for t in texts], "text string").write.parquet(pq)
+    oracle = _duckdb_vocab(f"{pq}/*.parquet", 10)
+    assertDataFrameEqual(entry_mod.vocab_from_docs(spark.read.parquet(pq), 10), oracle)
