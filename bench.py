@@ -44,6 +44,7 @@ import sys
 import __spark_entry__ as entry_mod
 from sparklda.io import synth_docs, time_noop
 from sparklda.session import get_spark
+from sparklda.text import vocab_from_docs
 
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 
@@ -83,7 +84,7 @@ def main() -> None:
 
     # Additive parallelism probe (see module docstring); not part of `value`.
     per_query["synth_vocab_80m"] = bench_one(
-        lambda: entry_mod.vocab_from_docs(synth_docs(spark, **SYNTH)),
+        lambda: vocab_from_docs(synth_docs(spark, **SYNTH)),
         warmups=2,
     )
 

@@ -2,13 +2,16 @@
 job, DataFrame-first.
 
 Today the engine computes one declared query, ``vocab_topv`` (corpus ->
-tokens -> word counts -> deterministic top-V dictionary), defined in
+tokens -> word counts -> deterministic top-V dictionary), declared in
 ``__spark_entry__.py`` and checked against a DuckDB oracle.
 
 Modules
 -------
 session     SparkSession bootstrap (``local[$SPARK_GRAFT_CPUS]``)
 io          fixture reader, synthetic corpus and noop-sink timer
+text        the tokenization rule and the top-V dictionary, in Spark
+            (``word_counts``, ``vocab_from_docs``) and in DuckDB SQL
+            (``vocab_oracle_sql``)
 plan        normalized plan text, plan operator nodes, and the snapshot
             tool ``python -m sparklda.plan SF_DIR`` (imported only by tests)
 """

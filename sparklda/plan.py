@@ -32,12 +32,22 @@ def plan_text(df: DataFrame) -> str:
 
 def plan_nodes(df: DataFrame) -> list:
     """The JVM ``SparkPlan`` operators of ``df``'s physical plan before AQE
-    runs it, breadth-first, so every parent comes before its children."""
-    nodes = [df._jdf.queryExecution().executedPlan().initialPlan()]
+    runs it, breadth-first, so every parent comes before its children.
+
+    AQE wraps only plans that need an exchange. A plan it does not wrap is
+    walked as executed, so it keeps its ``WholeStageCodegen`` and
+    ``InputAdapter`` wrapper nodes."""
+    root = df._jdf.queryExecution().executedPlan()
+    nodes = [root.initialPlan() if root.nodeName() == "AdaptiveSparkPlan" else root]
     for node in nodes:
         children = node.children()
         nodes.extend(children.apply(i) for i in range(children.size()))
     return nodes
+
+
+def exchanges(df: DataFrame) -> list:
+    """The shuffle exchanges among ``plan_nodes(df)``."""
+    return [n for n in plan_nodes(df) if n.nodeName() == "Exchange"]
 
 
 def main() -> None:

@@ -23,10 +23,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from pyspark.testing import assertDataFrameEqual
 
-import __spark_entry__ as entry_mod
 from sparklda.io import synth_docs, time_noop
-from sparklda.plan import plan_text
+from sparklda.plan import exchanges, plan_nodes
+from sparklda.text import vocab_from_docs, word_counts
 
 # >= 1M distinct keys per the round-21 verdict; ~10M tokens keeps the shared
 # wordcount cost small relative to the single-task sort the old plan pays.
@@ -38,31 +39,34 @@ MIN_SPEEDUP = 1.5
 
 
 def r20_fullwindow(docs, v):
-    """The pre-r21 query shape, verbatim (git aac3400~1:__spark_entry__.py):
-    row_number over the ENTIRE vocabulary, then orderBy(id).limit(v). The
-    orderBy on the window-derived column defeats Spark 4's
-    LimitPushDownThroughWindow rule, so this compiles to the historical
-    Exchange SinglePartition + full-vocab Sort + Window plan."""
-    words = docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
-    wc = words.filter(F.col("word") != "").groupBy("word").agg(F.count("*").alias("count"))
+    """The pre-r21 rank/limit shape (git aac3400~1:__spark_entry__.py) over
+    the same ``word_counts``: row_number over the ENTIRE vocabulary, then
+    orderBy(id).limit(v). The orderBy on the window-derived column defeats
+    Spark 4's LimitPushDownThroughWindow rule, so this compiles to the
+    historical Exchange SinglePartition + full-vocab Sort + Window plan."""
     win = Window.orderBy(F.desc("count"), F.asc("word"))
     return (
-        wc.withColumn("id", (F.row_number().over(win) - F.lit(1)).cast("long"))
+        word_counts(docs).withColumn("id", (F.row_number().over(win) - F.lit(1)).cast("long"))
         .orderBy("id")
         .limit(v)
         .select("word", "count", "id")
     )
 
 
+def _partitionings(df):
+    return [e.outputPartitioning().getClass().getSimpleName() for e in exchanges(df)]
+
+
 def test_plan_shapes_old_vs_new(spark):
     """Cheap, always-on: the old shape really is the scale-killer plan and
-    the new shape really avoids it, on the same synthetic input."""
-    docs = synth_docs(spark, 1000, 5, 100, 4)
-    old_plan = plan_text(r20_fullwindow(docs, V))
-    new_plan = plan_text(entry_mod.vocab_from_docs(docs, V))
-    assert "SinglePartition" in old_plan, old_plan
-    assert "SinglePartition" not in new_plan, new_plan
-    assert "TakeOrderedAndProject" in new_plan, new_plan
+    the new shape really avoids it, with the same rows, on a synthetic corpus
+    with more distinct words than V, so the cutoff applies."""
+    docs = synth_docs(spark, 300, 10, 500, 3)
+    old, new = r20_fullwindow(docs, 100), vocab_from_docs(docs, 100)
+    assert _partitionings(old) == ["SinglePartition$", "HashPartitioning"]
+    assert _partitionings(new) == ["HashPartitioning"]
+    assert "TakeOrderedAndProject" in [n.nodeName() for n in plan_nodes(new)]
+    assertDataFrameEqual(old, new)
 
 
 @pytest.mark.skipif(
@@ -71,9 +75,7 @@ def test_plan_shapes_old_vs_new(spark):
 )
 def test_takeordered_beats_fullwindow_at_scale(spark):
     def build_new():
-        return entry_mod.vocab_from_docs(
-            synth_docs(spark, N_DOCS, WORDS_PER_DOC, N_DISTINCT, PARTS), V
-        )
+        return vocab_from_docs(synth_docs(spark, N_DOCS, WORDS_PER_DOC, N_DISTINCT, PARTS), V)
 
     def build_old():
         return r20_fullwindow(

@@ -8,12 +8,14 @@ single-partition rank, so the window never sees more than VOCAB_SIZE rows.
 from __future__ import annotations
 
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.testing import assertDataFrameEqual
 
 import __spark_entry__ as entry_mod
 from sparklda.io import read_table, synth_docs
-from sparklda.plan import PLANS_DIR, plan_nodes, plan_text
+from sparklda.plan import PLANS_DIR, exchanges, plan_nodes, plan_text
+from sparklda.text import VOCAB_SIZE, vocab_from_docs, vocab_oracle_sql
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -22,20 +24,16 @@ def _vocab_topv(spark):
     return entry_mod.queries()["vocab_topv"](spark, SF_DIR)
 
 
-def _duckdb_vocab(parquet_glob, v):
-    """DuckDB's rows for ``vocab_oracle_sql(v)`` over the ``documents`` in ``parquet_glob``."""
+def _duckdb_vocab(documents, v):
+    """DuckDB's rows for ``vocab_oracle_sql(v)`` over ``documents``, an Arrow table."""
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{parquet_glob}'")
-    return con.execute(entry_mod.vocab_oracle_sql(v)).fetchall()
-
-
-def _exchanges(df):
-    """The shuffle exchanges of ``df``'s physical plan."""
-    return [n for n in plan_nodes(df) if n.nodeName() == "Exchange"]
+    con.register("documents", documents)
+    return con.execute(vocab_oracle_sql(v)).fetchall()
 
 
 def test_vocab_topv_matches_duckdb_oracle(spark):
-    oracle = _duckdb_vocab(f"{SF_DIR}/documents.parquet", entry_mod.VOCAB_SIZE)
+    # pyarrow reads the fixture, so the oracle does not depend on Spark's reader
+    oracle = _duckdb_vocab(pq.read_table(f"{SF_DIR}/documents.parquet"), VOCAB_SIZE)
     assertDataFrameEqual(_vocab_topv(spark), oracle)
 
 
@@ -59,7 +57,7 @@ def test_vocab_from_docs_rejects_vocab_size_below_one(spark, vocab_size):
     TypeError from ``<``."""
     docs = read_table(spark, "documents", SF_DIR)
     with pytest.raises(ValueError, match="vocab_size"):
-        entry_mod.vocab_from_docs(docs, vocab_size)
+        vocab_from_docs(docs, vocab_size)
 
 
 def test_vocab_topv_plan_matches_snapshot(spark):
@@ -74,7 +72,7 @@ def test_vocab_topv_plan_is_scale_safe(spark):
     exchange, so no SinglePartition exchange drags the full vocabulary
     through one task) and a distributed TakeOrderedAndProject for top-V."""
     df = _vocab_topv(spark)
-    (exchange,) = _exchanges(df)
+    (exchange,) = exchanges(df)
     assert exchange.outputPartitioning().getClass().getSimpleName() == "HashPartitioning"
     assert "TakeOrderedAndProject" in [n.nodeName() for n in plan_nodes(df)]
 
@@ -84,7 +82,7 @@ def test_vocab_topv_shuffle_uses_serialized_writer(spark):
     handle. With Spark's default bypassMergeThreshold the 200-way exchange
     gets a BypassMergeSortShuffleHandle, one file writer per reduce
     partition in every map task."""
-    (exchange,) = _exchanges(_vocab_topv(spark))
+    (exchange,) = exchanges(_vocab_topv(spark))
     handle = exchange.shuffleDependency().shuffleHandle()
     assert handle.getClass().getSimpleName() == "SerializedShuffleHandle"
 
@@ -97,27 +95,27 @@ def test_memory_pages_stay_below_g1_humongous_size(spark):
 
 
 def test_vocab_topv_scan_prunes_to_text(spark):
-    """Column pruning must reach the parquet scan (guide §6): the documents
-    table has 5 columns, the query needs only `text`. A refactor that widens
-    ReadSchema silently quintuples scan bytes at 100 TB."""
+    """Column pruning must reach the parquet scan: the documents table has 5
+    columns, the query needs only `text`. A refactor that widens ReadSchema
+    silently quintuples the bytes scanned."""
     # Spark's nodeName for a file scan ends in a space.
     (scan,) = [n for n in plan_nodes(_vocab_topv(spark)) if n.nodeName() == "Scan parquet "]
     assert scan.requiredSchema().simpleString() == "struct<text:string>"
 
 
 def test_vocab_topv_partial_agg_precedes_shuffle(spark):
-    """Skew insurance (guide §2.5): the map-side partial_count HashAggregate
+    """Skew insurance: the map-side partial_count HashAggregate
     must feed the hashpartitioning(word) Exchange, so each map task ships at
     most one row per distinct word — the Zipfian-head word can contribute
     <= #map-tasks shuffle rows, never its corpus frequency."""
-    (exchange,) = _exchanges(_vocab_topv(spark))
+    (exchange,) = exchanges(_vocab_topv(spark))
     agg = exchange.child()
     assert agg.nodeName() == "HashAggregate"
     exprs = agg.aggregateExpressions()
     assert [exprs.apply(i).mode().toString() for i in range(exprs.size())] == ["Partial"]
 
 
-def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
+def test_vocab_boundary_ties_at_cutoff_match_oracle(spark):
     """ADVICE r21: the fixture corpus has only 31 distinct words, so the
     fixture tests never exercise the top-V cutoff — the only place where
     top-V-then-rank could diverge from the oracle's rank-then-limit. This
@@ -134,19 +132,18 @@ def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
         counts[f"lo{i:02d}"] = 5
     assert len(counts) == 35 > v
     rows = [(i, " ".join([w] * n)) for i, (w, n) in enumerate(sorted(counts.items()))]
-    pq = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(pq)
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    oracle = _duckdb_vocab(f"{pq}/*.parquet", v)
+    oracle = _duckdb_vocab(docs.toArrow(), v)
     assert len(oracle) == v
-    assertDataFrameEqual(entry_mod.vocab_from_docs(spark.read.parquet(pq), v), oracle)
+    assertDataFrameEqual(vocab_from_docs(docs, v), oracle)
     # the cutoff row really is inside the tie group (tie_a..tie_e kept,
     # tie_f.. dropped by word ASC) — i.e. the boundary was exercised
     kept = {w for w, _, _ in oracle}
     assert "tie_e" in kept and "tie_f" not in kept
 
 
-def test_vocab_independent_of_shuffle_width(spark, tmp_path):
+def test_vocab_independent_of_shuffle_width(spark):
     """Same rows as DuckDB whatever the input partition count (1, 3, 64) and
     exchange width: 1, 3 and 200 (the default) reduce partitions, on a
     corpus with many more distinct words than V and count ties at the cutoff."""
@@ -156,12 +153,11 @@ def test_vocab_independent_of_shuffle_width(spark, tmp_path):
         # the words depend only on the row id, so every partitioning holds the same rows
         return synth_docs(spark, n_docs=300, words_per_doc=10, n_distinct=500, parts=parts)
 
-    pq = str(tmp_path / "docs.parquet")
-    docs(3).write.parquet(pq)
-    oracle = _duckdb_vocab(f"{pq}/*.parquet", v)
+    table = docs(3).toArrow()
+    oracle = _duckdb_vocab(table, v)
     assert len(oracle) == v
     # the first word past the cutoff ties with the last one kept
-    assert _duckdb_vocab(f"{pq}/*.parquet", v + 1)[-1][1] == oracle[-1][1]
+    assert _duckdb_vocab(table, v + 1)[-1][1] == oracle[-1][1]
 
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
@@ -169,9 +165,9 @@ def test_vocab_independent_of_shuffle_width(spark, tmp_path):
         for parts in (1, 3, 64):
             for width in (1, 3, 200):
                 spark.conf.set(key, str(width))
-                df = entry_mod.vocab_from_docs(docs(parts), v)
+                df = vocab_from_docs(docs(parts), v)
                 # one input partition already groups every word, so Spark plans no shuffle
-                widths = [e.outputPartitioning().numPartitions() for e in _exchanges(df)]
+                widths = [e.outputPartitioning().numPartitions() for e in exchanges(df)]
                 assert widths == ([width] if parts > 1 else [])
                 assertDataFrameEqual(df, oracle)
     finally:
@@ -182,11 +178,9 @@ ODD_TEXT = [None, "", "   ", "a  b", " a", "b ", "  a b  ", "a\tb", "\tA", "A a 
 
 
 @pytest.mark.parametrize("texts", [ODD_TEXT, []], ids=["odd-text", "empty-corpus"])
-def test_vocab_odd_text_matches_oracle(spark, tmp_path, texts):
+def test_vocab_odd_text_matches_oracle(spark, texts):
     """Null, empty and all-space text, double, leading and trailing spaces,
     tabs (not separators) and mixed case (kept apart), and a corpus with no
     documents: Spark's rows are DuckDB's."""
-    pq = str(tmp_path / "docs.parquet")
-    spark.createDataFrame([(t,) for t in texts], "text string").write.parquet(pq)
-    oracle = _duckdb_vocab(f"{pq}/*.parquet", 10)
-    assertDataFrameEqual(entry_mod.vocab_from_docs(spark.read.parquet(pq), 10), oracle)
+    docs = spark.createDataFrame([(t,) for t in texts], "text string")
+    assertDataFrameEqual(vocab_from_docs(docs, 10), _duckdb_vocab(docs.toArrow(), 10))
