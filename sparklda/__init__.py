@@ -8,7 +8,7 @@ tokens -> word counts -> deterministic top-V dictionary), declared in
 Modules
 -------
 session     SparkSession bootstrap (``local[$SPARK_GRAFT_CPUS]``)
-io          fixture reader, synthetic corpus and noop-sink timer
+io          fixture reader and synthetic corpus
 text        the tokenization rule and the top-V dictionary, in Spark
             (``word_counts``, ``vocab_from_docs``) and in DuckDB SQL
             (``vocab_oracle_sql``)

@@ -1,4 +1,4 @@
-"""Fixture reader and the corpus and timing helpers the bench and tests share.
+"""Fixture reader and the synthetic corpus the bench and tests share.
 
 The reference "parses" CSV with ``line.split(',')``, correct only because an
 upstream cleaner stripped every comma. This engine reads Parquet with an
@@ -9,7 +9,6 @@ silent corruption.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,10 +57,3 @@ def synth_docs(
         for j in range(words_per_doc)
     ]
     return spark.range(0, n_docs, 1, parts).select(F.concat_ws(" ", *cols).alias("text"))
-
-
-def time_noop(df: DataFrame) -> float:
-    """Seconds to compute every row of ``df`` into the noop sink, which discards them."""
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0

@@ -7,6 +7,8 @@ single-partition rank, so the window never sees more than VOCAB_SIZE rows.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pyarrow.parquet as pq
 import pytest
@@ -15,26 +17,42 @@ from pyspark.testing import assertDataFrameEqual
 import __spark_entry__ as entry_mod
 from sparklda.io import read_table, synth_docs
 from sparklda.plan import PLANS_DIR, exchanges, plan_nodes, plan_text
-from sparklda.text import VOCAB_SIZE, vocab_from_docs, vocab_oracle_sql
+from sparklda.text import vocab_from_docs, vocab_oracle_sql
 
 SF_DIR = "/root/testdata/sf0.001"
+# the scale the DuckDB oracle check runs at (TESTDATA.md)
+ORACLE_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 
 def _vocab_topv(spark):
     return entry_mod.queries()["vocab_topv"](spark, SF_DIR)
 
 
-def _duckdb_vocab(documents, v):
-    """DuckDB's rows for ``vocab_oracle_sql(v)`` over ``documents``, an Arrow table."""
+def _duckdb(documents, sql):
+    """DuckDB's rows for ``sql`` over ``documents``, an Arrow table."""
     con = duckdb.connect()
     con.register("documents", documents)
-    return con.execute(vocab_oracle_sql(v)).fetchall()
+    return con.execute(sql).fetchall()
+
+
+def _fixture_oracle(sf_dir):
+    # pyarrow reads the fixture, so the oracle does not depend on Spark's reader
+    return _duckdb(pq.read_table(f"{sf_dir}/documents.parquet"), entry_mod.oracle_sql()["vocab_topv"])
 
 
 def test_vocab_topv_matches_duckdb_oracle(spark):
-    # pyarrow reads the fixture, so the oracle does not depend on Spark's reader
-    oracle = _duckdb_vocab(pq.read_table(f"{SF_DIR}/documents.parquet"), VOCAB_SIZE)
-    assertDataFrameEqual(_vocab_topv(spark), oracle)
+    """The declared query against the oracle SQL the contract declares for it."""
+    assert entry_mod.queries().keys() == entry_mod.oracle_sql().keys()
+    assertDataFrameEqual(_vocab_topv(spark), _fixture_oracle(SF_DIR))
+
+
+def test_entry_reads_sf_dir_from_env(spark, monkeypatch):
+    """``entry`` is the smoke query; it reads ``$SPARK_GRAFT_SF_DIR``. Its
+    rows at sf0.01 differ from those at the default sf0.001 in their counts."""
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", ORACLE_SF_DIR)
+    oracle = _fixture_oracle(ORACLE_SF_DIR)
+    assert sorted(oracle) != sorted(_fixture_oracle(SF_DIR))
+    assertDataFrameEqual(entry_mod.entry(spark), oracle)
 
 
 def test_vocab_topv_deterministic(spark):
@@ -134,7 +152,7 @@ def test_vocab_boundary_ties_at_cutoff_match_oracle(spark):
     rows = [(i, " ".join([w] * n)) for i, (w, n) in enumerate(sorted(counts.items()))]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    oracle = _duckdb_vocab(docs.toArrow(), v)
+    oracle = _duckdb(docs.toArrow(), vocab_oracle_sql(v))
     assert len(oracle) == v
     assertDataFrameEqual(vocab_from_docs(docs, v), oracle)
     # the cutoff row really is inside the tie group (tie_a..tie_e kept,
@@ -154,10 +172,10 @@ def test_vocab_independent_of_shuffle_width(spark):
         return synth_docs(spark, n_docs=300, words_per_doc=10, n_distinct=500, parts=parts)
 
     table = docs(3).toArrow()
-    oracle = _duckdb_vocab(table, v)
+    oracle = _duckdb(table, vocab_oracle_sql(v))
     assert len(oracle) == v
     # the first word past the cutoff ties with the last one kept
-    assert _duckdb_vocab(table, v + 1)[-1][1] == oracle[-1][1]
+    assert _duckdb(table, vocab_oracle_sql(v + 1))[-1][1] == oracle[-1][1]
 
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
@@ -167,20 +185,31 @@ def test_vocab_independent_of_shuffle_width(spark):
                 spark.conf.set(key, str(width))
                 df = vocab_from_docs(docs(parts), v)
                 # one input partition already groups every word, so Spark plans no shuffle
-                widths = [e.outputPartitioning().numPartitions() for e in exchanges(df)]
-                assert widths == ([width] if parts > 1 else [])
+                partitionings = [e.outputPartitioning() for e in exchanges(df)]
+                assert [(p.getClass().getSimpleName(), p.numPartitions()) for p in partitionings] == (
+                    [("HashPartitioning", width)] if parts > 1 else []
+                )
                 assertDataFrameEqual(df, oracle)
     finally:
         spark.conf.set(key, saved)
 
 
 ODD_TEXT = [None, "", "   ", "a  b", " a", "b ", "  a b  ", "a\tb", "\tA", "A a B b"]
+# its distinct words: a and b (4 each), A, B, "a\tb" and "\tA" (1 each)
+ODD_TEXT_WORDS = 6
 
 
-@pytest.mark.parametrize("texts", [ODD_TEXT, []], ids=["odd-text", "empty-corpus"])
-def test_vocab_odd_text_matches_oracle(spark, texts):
+@pytest.mark.parametrize(
+    ("texts", "v"),
+    [(ODD_TEXT, 10), ([], 10), (ODD_TEXT, 1), (ODD_TEXT, ODD_TEXT_WORDS), (ODD_TEXT, ODD_TEXT_WORDS + 1)],
+    ids=["odd-text", "empty-corpus", "v=1", "v=d", "v=d+1"],
+)
+def test_vocab_odd_text_matches_oracle(spark, texts, v):
     """Null, empty and all-space text, double, leading and trailing spaces,
     tabs (not separators) and mixed case (kept apart), and a corpus with no
-    documents: Spark's rows are DuckDB's."""
+    documents: Spark's rows are DuckDB's. V runs past the d distinct words,
+    to exactly d, and down to 1, where the cutoff splits the a/b tie."""
     docs = spark.createDataFrame([(t,) for t in texts], "text string")
-    assertDataFrameEqual(vocab_from_docs(docs, 10), _duckdb_vocab(docs.toArrow(), 10))
+    oracle = _duckdb(docs.toArrow(), vocab_oracle_sql(v))
+    assert len(oracle) == min(v, ODD_TEXT_WORDS if texts else 0)
+    assertDataFrameEqual(vocab_from_docs(docs, v), oracle)
