@@ -85,7 +85,6 @@ def main() -> None:
     runs = int(raw_runs)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("sparklda-bench")
-    spark.sparkContext.setLogLevel("ERROR")
 
     def bench_one(build, warmups: int = 1) -> float:
         for _ in range(warmups):  # untimed; a fresh DataFrame every run

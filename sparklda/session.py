@@ -11,6 +11,8 @@ def get_spark(app_name: str = "sparklda") -> SparkSession:
     """Build (or fetch) the engine's local SparkSession.
 
     An unset ``SPARK_GRAFT_CPUS`` means ``local[*]``, one task slot per core.
+    Otherwise it must be ``*`` or a decimal int >= 1; any other value raises
+    ``ValueError`` before the JVM starts. Spark logs only errors.
 
     ``spark.driver.memory`` is set explicitly: in local mode it is the heap
     every task runs in, and reading the key back raises ``SQL_CONF_NOT_FOUND``
@@ -40,7 +42,11 @@ def get_spark(app_name: str = "sparklda") -> SparkSession:
     threads; with 1 MB pages there was 1.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    return (
+    # Checked before the builder runs: the JVM's error for a bad master names
+    # the URL, not the variable, and its master pattern takes only ASCII digits.
+    if cpus != "*" and not (cpus.isascii() and cpus.isdecimal() and int(cpus) >= 1):
+        raise ValueError(f"SPARK_GRAFT_CPUS must be * or an int >= 1, got {cpus!r}")
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.driver.memory", "8g")
@@ -49,3 +55,5 @@ def get_spark(app_name: str = "sparklda") -> SparkSession:
         .config("spark.buffer.pageSize", "1m")
         .getOrCreate()
     )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

@@ -45,10 +45,10 @@ def vocab_from_docs(docs: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
     # through one SinglePartition sort. (count, word) is a total order (word is
     # unique post-groupBy), so top-V-then-rank is row-for-row identical to
     # rank-then-take-first-V.
-    topv = word_counts(docs).orderBy(F.desc("count"), F.asc("word")).limit(vocab_size)
-    win = Window.orderBy(F.desc("count"), F.asc("word"))
+    order = (F.desc("count"), F.asc("word"))
+    topv = word_counts(docs).orderBy(*order).limit(vocab_size)
     return (
-        topv.withColumn("id", (F.row_number().over(win) - F.lit(1)).cast("long"))
+        topv.withColumn("id", (F.row_number().over(Window.orderBy(*order)) - F.lit(1)).cast("long"))
         .select("word", "count", "id")
     )
 

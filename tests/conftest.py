@@ -9,6 +9,4 @@ from sparklda.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("sparklda-tests")
-    s.sparkContext.setLogLevel("ERROR")
-    return s
+    return get_spark("sparklda-tests")

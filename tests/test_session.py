@@ -1,0 +1,17 @@
+"""Tests for the SparkSession bootstrap's checks on its environment."""
+
+from __future__ import annotations
+
+import pytest
+
+from sparklda.session import get_spark
+
+
+@pytest.mark.parametrize("cpus", ["abc", "0", ""])
+def test_get_spark_rejects_bad_cpus_before_spark_starts(monkeypatch, cpus):
+    """These values used to start the JVM and fail inside it, with an error
+    naming the master URL (``local[abc]``, ``local[]``) or a thread count,
+    not the variable. The check runs before the builder, so no JVM starts."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        get_spark()
