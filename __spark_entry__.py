@@ -5,8 +5,10 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
-The query code lives in ``sparklda.text``; ``vocab_from_docs`` and
-``VOCAB_SIZE`` are re-exported here for callers of this module.
+The query code lives in ``sparklda.text``. ``VOCAB_SIZE`` is imported for
+``oracle_sql``. ``vocab_from_docs`` stays importable from here because the
+paired benchmark (``perfbench/run.py`` and its event-log test) imports it
+from this module.
 """
 
 from __future__ import annotations

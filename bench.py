@@ -7,25 +7,22 @@ entry, and prints exactly ONE JSON line::
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {name: sec}, "sf": ...}
 
-Methodology (fixed across rounds so numbers stay comparable):
+Methodology (fixed, so numbers stay comparable round over round):
 
 * the timed action is the noop sink (``format("noop")``): it computes
   every column of every row and discards the result, so we time the
   computation, not an output format;
 * per query: 1 untimed warmup run (JVM/codegen warm, file listing cached),
-  then ``BENCH_RUNS`` timed runs (an int >= 1, default 3), reporting the
-  median;
+  then ``RUNS`` timed runs, reporting the median;
 * ``value`` is the sum of the per-query medians **of the declared queries
-  only** — byte-compatible with the round-21 definition, where the declared
-  set was the whole ``queries`` dict, so totals stay comparable across
-  rounds.
+  only**, so totals stay comparable when a probe is added to ``queries``.
 
-Round-22 addition: a synthetic parallelism probe, ``synth_vocab_80m``. It
-is one more key of ``queries``, beside the declared ones, because the
-driver diffs ``queries`` round over round.
+The synthetic parallelism probe, ``synth_vocab_80m``, is one more key of
+``queries``, beside the declared ones, because ``queries`` is diffed
+round over round.
 The sf0.1 fixture is a single small parquet file — one scan task, 31
-distinct words — so the declared query cannot exercise parallelism at any
-driver-supplied SF (the r21 scaling ratio was 0.48: 8 cores *beat* 32).
+distinct words — so the declared query cannot show parallelism at any
+SF the contract supplies: added cores give it nothing to share.
 The probe generates a deterministic in-process corpus (``spark.range`` +
 expressions, 64 partitions, 80M tokens, 100k distinct words), runs the
 exact declared transformation (``vocab_from_docs``), and is timed with the
@@ -59,6 +56,7 @@ from sparklda.text import vocab_from_docs
 # 9.41 s at 8 (BENCH_r22.json, BENCH_r22_c8.json).
 # Fixed partition count so the work is identical at every $SPARK_GRAFT_CPUS.
 SYNTH = {"n_docs": 4_000_000, "words_per_doc": 20, "n_distinct": 100_000, "parts": 64}
+RUNS = 3
 
 
 def time_noop(df: DataFrame) -> float:
@@ -79,17 +77,13 @@ def _sf_from_dir(sf_dir: str) -> float | None:
 
 
 def main() -> None:
-    raw_runs = os.environ.get("BENCH_RUNS", "3")
-    if not raw_runs.isdecimal() or int(raw_runs) < 1:  # checked before Spark starts
-        sys.exit(f"bench: BENCH_RUNS must be an int >= 1, got {raw_runs!r}")
-    runs = int(raw_runs)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("sparklda-bench")
 
     def bench_one(build, warmups: int = 1) -> float:
         for _ in range(warmups):  # untimed; a fresh DataFrame every run
             time_noop(build())
-        return round(statistics.median(time_noop(build()) for _ in range(runs)), 4)
+        return round(statistics.median(time_noop(build()) for _ in range(RUNS)), 4)
 
     per_query: dict[str, float] = {}
     for name, fn in entry_mod.queries().items():

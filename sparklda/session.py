@@ -8,11 +8,15 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "sparklda") -> SparkSession:
-    """Build (or fetch) the engine's local SparkSession.
+    """Build the engine's local SparkSession, or return the running one.
 
     An unset ``SPARK_GRAFT_CPUS`` means ``local[*]``, one task slot per core.
     Otherwise it must be ``*`` or a decimal int >= 1; any other value raises
-    ``ValueError`` before the JVM starts. Spark logs only errors.
+    ``ValueError`` before the JVM starts. A JVM has one master, so when a
+    session is already running on another master than
+    ``local[$SPARK_GRAFT_CPUS]``, ``ValueError`` is raised and that session
+    keeps running; stop it first to change the core count. Spark logs only
+    errors.
 
     ``spark.driver.memory`` is set explicitly: in local mode it is the heap
     every task runs in, and reading the key back raises ``SQL_CONF_NOT_FOUND``
@@ -55,5 +59,8 @@ def get_spark(app_name: str = "sparklda") -> SparkSession:
         .config("spark.buffer.pageSize", "1m")
         .getOrCreate()
     )
+    master = spark.sparkContext.master
+    if master != f"local[{cpus}]":
+        raise ValueError(f"SPARK_GRAFT_CPUS asks for local[{cpus}], but a session is running on {master}")
     spark.sparkContext.setLogLevel("ERROR")
     return spark

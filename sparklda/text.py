@@ -37,8 +37,11 @@ def vocab_from_docs(docs: DataFrame, vocab_size: int = VOCAB_SIZE) -> DataFrame:
     not over the corpus. Shared by the declared query, the bench's synthetic
     probe and the tests, so every surface times and checks the same plan.
     """
-    if isinstance(vocab_size, bool) or not isinstance(vocab_size, int) or vocab_size < 1:
-        raise ValueError(f"vocab_size must be an int >= 1, got {vocab_size!r}")
+    # From this many rows up, Spark plans limit(V) as a sort of the whole
+    # vocabulary on one partition instead of TakeOrderedAndProject.
+    bound = int(docs.sparkSession.conf.get("spark.sql.execution.topKSortFallbackThreshold"))
+    if isinstance(vocab_size, bool) or not isinstance(vocab_size, int) or not 1 <= vocab_size < bound:
+        raise ValueError(f"vocab_size must be an int >= 1 and < {bound}, got {vocab_size!r}")
     # Distributed top-V FIRST (TakeOrderedAndProject: per-partition top-V, then
     # a merge bounded by V x partitions) so the rank below never sees more than
     # V rows. Ranking before limiting would drag the entire corpus vocabulary

@@ -65,11 +65,13 @@ def test_vocab_topv_schema(spark):
     ]
 
 
-@pytest.mark.parametrize("vocab_size", [0, -1, 2.5, True, "10"])
-def test_vocab_from_docs_rejects_vocab_size_below_one(spark, vocab_size):
+@pytest.mark.parametrize("vocab_size", [0, -1, 2.5, True, "10", 2**31 - 16, 2**31])
+def test_vocab_from_docs_rejects_bad_vocab_size(spark, vocab_size):
     """0 used to return no rows silently, -1 to fail inside Spark's analyzer,
-    2.5 and True to fail inside ``limit`` as a Py4JError, and "10" with a bare
-    TypeError from ``<``."""
+    2.5, True and 2**31 to fail inside ``limit`` as a Py4JError, and "10" with
+    a bare TypeError from ``<``. 2**31 - 16, the session's
+    ``topKSortFallbackThreshold``, planned the whole vocabulary's sort on one
+    partition."""
     docs = read_table(spark, "documents", SF_DIR)
     with pytest.raises(ValueError, match="vocab_size"):
         vocab_from_docs(docs, vocab_size)
