@@ -10,7 +10,7 @@ Modules
 session     SparkSession bootstrap (``local[$SPARK_GRAFT_CPUS]``)
 io          fixture reader and synthetic corpus
 text        the tokenization rule and the top-V dictionary, in Spark
-            (``word_counts``, ``vocab_from_docs``) and in DuckDB SQL
+            (``vocab_from_docs``, one SQL statement) and in DuckDB SQL
             (``vocab_oracle_sql``)
 plan        normalized plan text, plan operator nodes, and the snapshot
             tool ``python -m sparklda.plan SF_DIR`` (imported only by tests)

@@ -13,6 +13,7 @@ import os
 import duckdb
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.testing import assertDataFrameEqual
 
 import __spark_entry__ as entry_mod
@@ -75,6 +76,21 @@ def test_vocab_from_docs_rejects_bad_vocab_size(spark, vocab_size):
     docs = read_table(spark, "documents", SF_DIR)
     with pytest.raises(ValueError, match="vocab_size"):
         vocab_from_docs(docs, vocab_size)
+
+
+def test_vocab_from_docs_leaves_no_temp_view(spark):
+    """``spark.sql`` registers ``docs`` as a ``_pyspark_<uuid>`` temp view for
+    the statement; it must be gone after the call, also when analysis fails
+    on a DataFrame with no ``text`` column."""
+
+    def views():
+        return [t.name for t in spark.catalog.listTables() if t.name.startswith("_pyspark_")]
+
+    vocab_from_docs(read_table(spark, "documents", SF_DIR))
+    assert views() == []
+    with pytest.raises(AnalysisException, match="text"):
+        vocab_from_docs(spark.createDataFrame([("a b",)], "body string"))
+    assert views() == []
 
 
 def test_vocab_topv_plan_matches_snapshot(spark):
