@@ -7,7 +7,8 @@ tokens -> word counts -> deterministic top-V dictionary), declared in
 
 Modules
 -------
-session     SparkSession bootstrap (``local[$SPARK_GRAFT_CPUS]``)
+session     SparkSession bootstrap (``local[$SPARK_GRAFT_CPUS]``) and the driver
+            JVM's cached class-data archive
 io          fixture reader and synthetic corpus
 text        the tokenization rule and the top-V dictionary, in Spark
             (``vocab_from_docs``, one SQL statement) and in DuckDB SQL

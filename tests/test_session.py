@@ -1,10 +1,15 @@
-"""Tests for the SparkSession bootstrap's checks on its environment."""
+"""Tests for the SparkSession bootstrap: its checks on its environment and its class-data archive."""
 
 from __future__ import annotations
 
+import os
+import random
+import subprocess
+import sys
+
 import pytest
 
-from sparklda.session import get_spark
+from sparklda.session import CACHE, JVM_LOG, archive_path, get_spark, jvm_launch
 
 
 @pytest.mark.parametrize("cpus", ["abc", "0", ""])
@@ -26,3 +31,126 @@ def test_get_spark_rejects_cpus_unlike_the_running_master(spark, monkeypatch):
         get_spark()
     assert spark.sparkContext.master == running
     assert spark.range(3).count() == 3
+
+
+def _machine(tmp_path, conf_file="spark-defaults.conf.template"):
+    """An environment whose Spark, JVM and $HOME are files under ``tmp_path``: nothing starts."""
+    spark_home, java_home = tmp_path / "spark", tmp_path / "jdk"
+    for path in (
+        spark_home / "conf" / conf_file,
+        spark_home / "jars" / "spark-core.jar",
+        java_home / "bin" / "java",
+        java_home / "lib" / "server" / "libjvm.so",
+    ):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(b"x")
+    return {"SPARK_HOME": str(spark_home), "JAVA_HOME": str(java_home), "HOME": str(tmp_path / "home")}
+
+
+@pytest.mark.parametrize("user_conf", ["SPARK_CONF_DIR", "HADOOP_CONF_DIR", "spark-defaults.conf"])
+def test_jvm_launch_leaves_a_user_conf_alone(tmp_path, user_conf):
+    """JDK 17 maps no archive while a non-empty directory is on the
+    classpath, and ``SPARK_CONF_DIR`` and ``HADOOP_CONF_DIR`` are on it. A
+    user's conf directory, or a real file in Spark's own, keeps the launch
+    exactly as it was."""
+    if user_conf.endswith("_DIR"):
+        environ = dict(_machine(tmp_path), **{user_conf: str(tmp_path / "my-conf")})
+    else:
+        environ = _machine(tmp_path, conf_file=user_conf)
+    before = dict(environ)
+    assert jvm_launch(environ) == ({}, None, None)
+    assert environ == before
+    assert not (tmp_path / "home").exists()
+
+
+@pytest.mark.parametrize("returncode", [0, 1, -9], ids=["exit-0", "failed", "killed"])
+def test_only_a_dump_whose_jvm_exited_0_is_promoted(tmp_path, returncode):
+    """A half-written archive crashes the JVM that maps it (SIGBUS), so a
+    dump from a JVM that failed or was killed never reaches the archive
+    path; the next start dumps again. One that exited 0 is mapped next."""
+    environ = _machine(tmp_path)
+    env, options, dump = jvm_launch(environ)
+    assert options.startswith(f"-XX:ArchiveClassesAtExit={dump.tmp} ")
+    assert env == {"SPARK_CONF_DIR": os.path.join(os.path.dirname(dump.archive), "conf")}
+    with open(dump.tmp, "wb") as fh:
+        fh.write(b"partial archive")
+    dump.finish(returncode)
+    assert not os.path.exists(dump.tmp)
+    assert os.path.exists(dump.archive) == (returncode == 0)
+    _, options, again = jvm_launch(environ)
+    if returncode == 0:
+        assert again is None and options.startswith(f"-XX:SharedArchiveFile={dump.archive} ")
+    else:
+        assert options.startswith(f"-XX:ArchiveClassesAtExit={again.tmp} ")
+        again.finish(1)
+
+
+def test_one_process_dumps_while_others_start_plain(tmp_path):
+    """A second dump of the same archive would cost its process about 5 s
+    of start-up and 13 s at exit for nothing."""
+    environ = _machine(tmp_path)
+    _, _, dump = jvm_launch(environ)
+    assert jvm_launch(environ)[1:] == (JVM_LOG, None)
+    dump.finish(1)
+
+
+def test_stale_dump_of_a_dead_process_is_removed(tmp_path):
+    """Each archive is about 163 MB; the temporary file of a process that
+    died before promoting it would otherwise stay in the cache forever."""
+    environ = _machine(tmp_path)
+    cache = tmp_path / "home" / CACHE
+    cache.mkdir(parents=True)
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    stale = cache / f"0123456789abcdef.jsa.{gone.pid}.tmp"
+    live = cache / f"0123456789abcdef.jsa.{os.getpid()}.tmp"
+    stale.write_bytes(b"x")
+    live.write_bytes(b"x")
+    jvm_launch(environ)[2].finish(1)
+    assert not stale.exists()
+    assert live.exists()
+
+
+CORRUPT_ARCHIVE_CHILD = """
+import sys
+
+import duckdb
+import pyarrow.parquet as pq
+
+import __spark_entry__ as entry_mod
+from sparklda.session import get_spark
+
+archive, sf_dir = sys.argv[1:]
+spark = get_spark()
+jvm_args = list(spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+assert f"-XX:SharedArchiveFile={archive}" in jvm_args, jvm_args
+con = duckdb.connect()
+con.register("documents", pq.read_table(f"{sf_dir}/documents.parquet"))
+want = sorted(con.execute(entry_mod.oracle_sql()["vocab_topv"]).fetchall())
+assert sorted(tuple(r) for r in entry_mod.queries()["vocab_topv"](spark, sf_dir).collect()) == want
+"""
+
+
+def test_fresh_session_starts_over_a_corrupt_archive(tmp_path):
+    """The JVM maps whatever file sits at the archive path. One of random
+    bytes must start the JVM plain, without a word on stdout, which is
+    ``bench.py``'s one-JSON-line channel."""
+    environ = {k: v for k, v in os.environ.items() if k != "SPARK_CONF_DIR"}
+    environ["HOME"] = str(tmp_path)
+    archive = archive_path(environ)
+    os.makedirs(os.path.dirname(archive))
+    noise = random.Random(7).randbytes(1 << 20)
+    with open(archive, "wb") as fh:
+        fh.write(noise)
+    child = subprocess.run(
+        [sys.executable, "-c", CORRUPT_ARCHIVE_CHILD, archive, "/root/testdata/sf0.001"],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=environ,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert child.returncode == 0, child.stderr[-4000:]
+    assert child.stdout == ""
+    with open(archive, "rb") as fh:
+        assert fh.read() == noise
