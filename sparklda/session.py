@@ -24,9 +24,11 @@ CACHE = os.path.join(".cache", "spark-graft")
 # Variables that put a directory on the driver's classpath. JDK 17 neither
 # dumps nor maps an archive while a non-empty directory is on it.
 CLASSPATH_VARS = ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
-# Sent with either archive flag: JVM warnings go to stdout by default, and a
-# dump prints about 700 of them.
-JVM_LOG = "-Xlog:disable -Xlog:all=warning:stderr"
+# Sent with either archive flag: JVM warnings go to stdout by default. A dump
+# warns about each class it cannot archive (837 lines for Spark's jars); those
+# are tagged ``cds`` alone, so a mismatched archive's ``[cds,dynamic]`` warning
+# still reaches stderr.
+JVM_LOG = "-Xlog:disable -Xlog:all=warning:stderr -Xlog:cds=off:stderr"
 # The dump took 12.7-14.1 s at exit on a 4-vCPU host.
 DUMP_WAIT_S = 120
 
@@ -124,13 +126,14 @@ def _remove_stale_dumps(cache: str) -> None:
 def jvm_launch(environ: Mapping[str, str]) -> tuple[dict[str, str], str | None, ArchiveDump | None]:
     """How the driver JVM starts: (variables to set, ``spark.driver.extraJavaOptions``, claimed dump).
 
-    Without an ``archive_path`` this is ``({}, None, None)``: nothing is
-    set, and a user's ``spark.driver.extraJavaOptions`` stays in force.
-    Otherwise ``SPARK_CONF_DIR`` goes to an empty directory in the cache,
-    which is what the default conf directory of templates amounts to, and
-    the JVM maps the archive if it exists. If it does not, the first process
-    to claim it dumps it; any other starts plain until it is promoted.
-    ``environ`` is not modified.
+    One of three: map the archive if it exists; else dump it if this
+    process wins ``ArchiveDump.claim``; else start plain with
+    ``({}, None, None)``, which sets nothing and leaves a user's
+    ``spark.driver.extraJavaOptions`` in force. A plain start is also what
+    a process gets without an ``archive_path``, or while another process
+    dumps. To map or dump, ``SPARK_CONF_DIR`` goes to an empty directory in
+    the cache, which is what the default conf directory of templates
+    amounts to. ``environ`` is not modified.
     """
     archive = archive_path(environ)
     if archive is None:
@@ -142,15 +145,14 @@ def jvm_launch(environ: Mapping[str, str]) -> tuple[dict[str, str], str | None, 
         if os.listdir(conf):
             return {}, None, None
         _remove_stale_dumps(cache)
-        dump = None if os.path.exists(archive) else ArchiveDump.claim(archive)
+        if os.path.exists(archive):
+            return {"SPARK_CONF_DIR": conf}, f"-XX:SharedArchiveFile={archive} {JVM_LOG}", None
+        dump = ArchiveDump.claim(archive)
     except OSError:  # an unwritable cache: start as if there were none
         return {}, None, None
-    env = {"SPARK_CONF_DIR": conf}
-    if dump is not None:
-        return env, f"-XX:ArchiveClassesAtExit={dump.tmp} {JVM_LOG}", dump
-    if os.path.exists(archive):
-        return env, f"-XX:SharedArchiveFile={archive} {JVM_LOG}", None
-    return env, JVM_LOG, None
+    if dump is None:
+        return {}, None, None
+    return {"SPARK_CONF_DIR": conf}, f"-XX:ArchiveClassesAtExit={dump.tmp} {JVM_LOG}", dump
 
 
 def _finish_dump(dump: ArchiveDump, jvm: subprocess.Popen) -> None:
@@ -220,12 +222,14 @@ def get_spark(app_name: str = "sparklda") -> SparkSession:
     When no archive exists, the first process dumps one: its set-up took
     15.8-18.6 s, and at interpreter exit it waits 13-14 s while its JVM
     writes the 163 MB file. Only a JVM that exited 0 gets its file promoted,
-    by ``os.replace``. JDK 17 neither dumps nor maps while a non-empty
-    directory is on the classpath, so the archive is used only when
-    ``SPARK_CONF_DIR`` is unset and Spark's conf directory holds nothing
-    but templates; ``SPARK_CONF_DIR`` is then set to the cache's empty
-    ``conf``. A mismatched or corrupt archive starts the JVM plain; JVM
-    warnings go to stderr.
+    by ``os.replace``; a process that starts while another one dumps starts
+    plain. JDK 17 neither dumps nor maps while a non-empty directory is on
+    the classpath, so the archive is used only when ``SPARK_CONF_DIR`` is
+    unset and Spark's conf directory holds nothing but templates.
+    ``SPARK_CONF_DIR`` is then set to the cache's empty ``conf`` for the
+    launch only: it is removed again once ``getOrCreate`` returns or raises,
+    so a process this one starts later maps the archive too. A mismatched
+    or corrupt archive starts the JVM plain; JVM warnings go to stderr.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # Checked before the builder runs: the JVM's error for a bad master names
@@ -240,14 +244,20 @@ def get_spark(app_name: str = "sparklda") -> SparkSession:
         .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.buffer.pageSize", "1m")
     )
-    dump = None
+    env, dump = {}, None
     # With PYSPARK_GATEWAY_PORT set, a JVM started elsewhere is already running.
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         env, java_options, dump = jvm_launch(os.environ)
-        os.environ.update(env)
         if java_options:
             builder = builder.config("spark.driver.extraJavaOptions", java_options)
-    spark = builder.getOrCreate()
+    # Only the launcher script reads them; left set, they would keep any
+    # process started later from mapping the archive.
+    os.environ.update(env)
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        for var in env:
+            del os.environ[var]
     if dump is not None:
         atexit.register(_finish_dump, dump, SparkContext._gateway.proc)
     master = spark.sparkContext.master
