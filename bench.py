@@ -26,9 +26,11 @@ SF the contract supplies: added cores give it nothing to share.
 The probe generates a deterministic in-process corpus (``spark.range`` +
 expressions, 64 partitions, 80M tokens, 100k distinct words), runs the
 exact declared transformation (``vocab_from_docs``), and is timed with the
-same noop-median methodology (2 warmups instead of 1 — measured: the first
-post-warmup run of this expression tree is still 1.5-2x steady state while
-the JIT finishes). Its time is reported in ``queries`` but deliberately NOT
+same noop-median methodology, but after 2 warmups instead of 1: the JIT is
+still finishing this expression tree after the first. On a 4-vCPU host at
+4 cores, the median of runs 2-4 read 1-8 % above that of runs 3-5 in five
+of six processes and equal in the sixth; at 2 cores it read 9 % below to
+1 % above. Its time is reported in ``queries`` but deliberately NOT
 added to ``value``. Nothing is cached or persisted: every run regenerates
 the corpus from ``spark.range``.
 """
@@ -52,8 +54,8 @@ from sparklda.text import vocab_from_docs
 # split/explode + map-side partial agg of 80M tokens over 64 input
 # partitions), so added cores have work to share; 100k distinct words keeps
 # the shuffle small, so the time reflects compute, not local-mode shuffle
-# bandwidth. On a 32-core host in round 22 it ran 5.58 s at 32 cores and
-# 9.41 s at 8 (BENCH_r22.json, BENCH_r22_c8.json).
+# bandwidth. On a 4-vCPU host its median ran 7.7-10.5 s at 4 cores and
+# 14.1-18.4 s at 2 (six processes each).
 # Fixed partition count so the work is identical at every $SPARK_GRAFT_CPUS.
 SYNTH = {"n_docs": 4_000_000, "words_per_doc": 20, "n_distinct": 100_000, "parts": 64}
 RUNS = 3

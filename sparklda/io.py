@@ -2,8 +2,11 @@
 
 The reference "parses" CSV with ``line.split(',')``, correct only because an
 upstream cleaner stripped every comma. This engine reads Parquet with an
-explicit StructType schema instead, so schema drift is an error rather than
-silent corruption.
+explicit StructType schema instead, with no inference pass. The schema
+catches a changed type, not a lost column: a column stored with another
+type fails the scan, a declared column the file lacks (missing or renamed)
+reads as null without an error, and a column the schema does not name is
+ignored.
 """
 
 from __future__ import annotations
@@ -14,8 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Explicit schemas: reads fail loudly on drift, and the reader never pays an
-# inference pass. Names/types match the fixtures described in TESTDATA.md.
+# Explicit schemas: the reader never pays an inference pass (what they catch
+# is in the module docstring). Names/types match the fixtures described in
+# TESTDATA.md.
 SCHEMAS: dict[str, T.StructType] = {
     "documents": T.StructType(
         [

@@ -29,7 +29,7 @@ CLASSPATH_VARS = ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_D
 # are tagged ``cds`` alone, so a mismatched archive's ``[cds,dynamic]`` warning
 # still reaches stderr.
 JVM_LOG = "-Xlog:disable -Xlog:all=warning:stderr -Xlog:cds=off:stderr"
-# The dump took 12.7-14.1 s at exit on a 4-vCPU host.
+# Far above the dump's wait at exit, which the ``get_spark`` docstring gives.
 DUMP_WAIT_S = 120
 
 

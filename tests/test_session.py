@@ -54,6 +54,23 @@ def _machine(tmp_path, conf_file="spark-defaults.conf.template"):
     return {"SPARK_HOME": str(spark_home), "JAVA_HOME": str(java_home), "HOME": str(tmp_path / "home")}
 
 
+def test_archive_key_follows_the_jvm_and_the_jars(tmp_path):
+    """An archive maps only under the JVM and classpath it was dumped with.
+    The key is what gives a JDK or Spark upgrade a fresh dump, instead of a
+    stale archive that every later start falls back from."""
+    environ = _machine(tmp_path)
+    archive = archive_path(environ)
+    assert archive == archive_path(environ)
+    keys = {archive}
+    libjvm = tmp_path / "jdk" / "lib" / "server" / "libjvm.so"
+    for upgraded in (tmp_path / "spark" / "jars" / "spark-core.jar", libjvm):
+        upgraded.write_bytes(b"a larger file")
+        keys.add(archive_path(environ))
+    assert len(keys) == 3 and None not in keys
+    libjvm.unlink()
+    assert archive_path(environ) is None
+
+
 @pytest.mark.parametrize("user_conf", ["SPARK_CONF_DIR", "HADOOP_CONF_DIR", "spark-defaults.conf"])
 def test_jvm_launch_leaves_a_user_conf_alone(tmp_path, user_conf):
     """JDK 17 maps no archive while a non-empty directory is on the
@@ -70,22 +87,30 @@ def test_jvm_launch_leaves_a_user_conf_alone(tmp_path, user_conf):
     assert not (tmp_path / "home").exists()
 
 
-@pytest.mark.parametrize("returncode", [0, 1, -9], ids=["exit-0", "failed", "killed"])
-def test_only_a_dump_whose_jvm_exited_0_is_promoted(tmp_path, returncode):
+@pytest.mark.parametrize(
+    ("returncode", "written"),
+    [(0, b"partial archive"), (1, b"partial archive"), (-9, b"partial archive"), (0, None), (0, b"")],
+    ids=["exit-0", "failed", "killed", "exit-0-no-file", "exit-0-empty-file"],
+)
+def test_only_a_dump_whose_jvm_exited_0_is_promoted(tmp_path, returncode, written):
     """A half-written archive crashes the JVM that maps it (SIGBUS), so a
     dump from a JVM that failed or was killed never reaches the archive
-    path; the next start dumps again. One that exited 0 is mapped next."""
+    path; the next start dumps again. So does the next start after a JVM
+    that exited 0 but wrote no file or an empty one. A non-empty file from
+    a JVM that exited 0 is mapped next."""
     environ = _machine(tmp_path)
     env, options, dump = jvm_launch(environ)
     assert options.startswith(f"-XX:ArchiveClassesAtExit={dump.tmp} ")
     assert env == {"SPARK_CONF_DIR": os.path.join(os.path.dirname(dump.archive), "conf")}
-    with open(dump.tmp, "wb") as fh:
-        fh.write(b"partial archive")
+    if written is not None:
+        with open(dump.tmp, "wb") as fh:
+            fh.write(written)
     dump.finish(returncode)
+    promoted = returncode == 0 and bool(written)
     assert not os.path.exists(dump.tmp)
-    assert os.path.exists(dump.archive) == (returncode == 0)
+    assert os.path.exists(dump.archive) == promoted
     _, options, again = jvm_launch(environ)
-    if returncode == 0:
+    if promoted:
         assert again is None and options.startswith(f"-XX:SharedArchiveFile={dump.archive} ")
     else:
         assert options.startswith(f"-XX:ArchiveClassesAtExit={again.tmp} ")
