@@ -3,10 +3,12 @@
 The reference "parses" CSV with ``line.split(',')``, correct only because an
 upstream cleaner stripped every comma. This engine reads Parquet with an
 explicit StructType schema instead, with no inference pass. The schema
-catches a changed type, not a lost column: a column stored with another
-type fails the scan, a declared column the file lacks (missing or renamed)
-reads as null without an error, and a column the schema does not name is
-ignored.
+catches a changed type only in a column a query reads, and never a lost
+column: a column stored with another type fails the scan that reads it
+(today's query reads only ``text``; ``lang`` stored as int32 passes
+``vocab_from_docs`` and fails ``collect()`` of the whole table), a declared
+column the file lacks (missing or renamed) reads as null without an error,
+and a column the schema does not name is ignored.
 """
 
 from __future__ import annotations

@@ -69,10 +69,15 @@ def archive_path(environ: Mapping[str, str]) -> str | None:
 
 
 class ArchiveDump:
-    """This process's claim to dump the archive: a lock held until its JVM has exited.
+    """This process's claim to dump the archive: the cache's one lock, held until its JVM has exited.
 
-    The JVM writes to ``tmp``, a name unique to this process; a JVM may have
-    the archive path mapped, so nothing is ever written in place there.
+    A dump is in flight only while its process holds the lock, so whoever
+    takes the lock deletes every ``*.tmp`` in the cache as a leftover, then
+    keeps it to dump or, if the archive exists, releases it at once. The
+    JVM writes to ``tmp``, a name unique to this process: a killed holder's
+    JVM may still write its file after the next holder's JVM has started,
+    and a JVM may have the archive path mapped, so nothing is ever written
+    in place there.
     """
 
     def __init__(self, archive: str, lock):
@@ -82,14 +87,17 @@ class ArchiveDump:
 
     @classmethod
     def claim(cls, archive: str) -> ArchiveDump | None:
-        """The claim, or None while another process holds it or once the archive exists."""
-        lock = open(archive + ".lock", "a")  # never deleted: a new inode would be a second lock
+        """The claim, or None while another process holds the lock or once the archive exists."""
+        cache = os.path.dirname(archive)
+        lock = open(os.path.join(cache, "lock"), "a")  # never deleted: a new inode would be a second lock
         try:
             fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
         except BlockingIOError:
             lock.close()
             return None
-        if os.path.exists(archive):  # promoted by the process that held the lock
+        for tmp in glob.glob(os.path.join(cache, "*.tmp")):
+            os.remove(tmp)
+        if os.path.exists(archive):  # promoted by an earlier holder
             lock.close()
             return None
         return cls(archive, lock)
@@ -108,32 +116,18 @@ class ArchiveDump:
         self._lock.close()
 
 
-def _remove_stale_dumps(cache: str) -> None:
-    """Delete the temporary archives of processes that are gone: they are never promoted."""
-    for name in os.listdir(cache):
-        pid = name.removesuffix(".tmp").rpartition(".")[2]
-        if not (name.endswith(".tmp") and pid.isdecimal()):
-            continue
-        try:
-            os.kill(int(pid), 0)
-        except ProcessLookupError:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(os.path.join(cache, name))
-        except PermissionError:  # alive, under another user
-            pass
-
-
 def jvm_launch(environ: Mapping[str, str]) -> tuple[dict[str, str], str | None, ArchiveDump | None]:
     """How the driver JVM starts: (variables to set, ``spark.driver.extraJavaOptions``, claimed dump).
 
-    One of three: map the archive if it exists; else dump it if this
-    process wins ``ArchiveDump.claim``; else start plain with
-    ``({}, None, None)``, which sets nothing and leaves a user's
-    ``spark.driver.extraJavaOptions`` in force. A plain start is also what
-    a process gets without an ``archive_path``, or while another process
-    dumps. To map or dump, ``SPARK_CONF_DIR`` goes to an empty directory in
-    the cache, which is what the default conf directory of templates
-    amounts to. ``environ`` is not modified.
+    One of three: dump the archive if this process wins
+    ``ArchiveDump.claim`` and it does not exist yet; else map it if it
+    exists; else start plain with ``({}, None, None)``, which sets nothing
+    and leaves a user's ``spark.driver.extraJavaOptions`` in force. A plain
+    start is also what a process gets without an ``archive_path``, with a
+    cache it cannot write, or while another process dumps. To map or dump,
+    ``SPARK_CONF_DIR`` goes to an empty directory in the cache, which is
+    what the default conf directory of templates amounts to. ``environ`` is
+    not modified.
     """
     archive = archive_path(environ)
     if archive is None:
@@ -144,15 +138,14 @@ def jvm_launch(environ: Mapping[str, str]) -> tuple[dict[str, str], str | None, 
         os.makedirs(conf, exist_ok=True)
         if os.listdir(conf):
             return {}, None, None
-        _remove_stale_dumps(cache)
-        if os.path.exists(archive):
-            return {"SPARK_CONF_DIR": conf}, f"-XX:SharedArchiveFile={archive} {JVM_LOG}", None
         dump = ArchiveDump.claim(archive)
     except OSError:  # an unwritable cache: start as if there were none
         return {}, None, None
-    if dump is None:
-        return {}, None, None
-    return {"SPARK_CONF_DIR": conf}, f"-XX:ArchiveClassesAtExit={dump.tmp} {JVM_LOG}", dump
+    if dump is not None:
+        return {"SPARK_CONF_DIR": conf}, f"-XX:ArchiveClassesAtExit={dump.tmp} {JVM_LOG}", dump
+    if os.path.exists(archive):
+        return {"SPARK_CONF_DIR": conf}, f"-XX:SharedArchiveFile={archive} {JVM_LOG}", None
+    return {}, None, None
 
 
 def _finish_dump(dump: ArchiveDump, jvm: subprocess.Popen) -> None:

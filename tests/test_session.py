@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import random
 import subprocess
@@ -9,7 +10,9 @@ import sys
 
 import pytest
 
+from sparklda.io import synth_docs
 from sparklda.session import CACHE, archive_path, get_spark, jvm_launch
+from sparklda.text import vocab_from_docs
 
 
 @pytest.mark.parametrize("cpus", ["abc", "0", ""])
@@ -128,45 +131,62 @@ def test_one_process_dumps_while_others_start_plain(tmp_path):
 
 def test_stale_dump_of_a_dead_process_is_removed(tmp_path):
     """Each archive is about 163 MB; the temporary file of a process that
-    died before promoting it would otherwise stay in the cache forever."""
+    died before promoting it would otherwise stay in the cache forever. A
+    dump is in flight only while its process holds the cache's lock, so a
+    leftover goes even when its pid names a live process again (pids are
+    reused), and the file of a process that holds the lock stays."""
     environ = _machine(tmp_path)
     cache = tmp_path / "home" / CACHE
     cache.mkdir(parents=True)
     gone = subprocess.Popen(["true"])
     gone.wait()
-    stale = cache / f"0123456789abcdef.jsa.{gone.pid}.tmp"
-    live = cache / f"0123456789abcdef.jsa.{os.getpid()}.tmp"
-    stale.write_bytes(b"x")
-    live.write_bytes(b"x")
-    jvm_launch(environ)[2].finish(1)
-    assert not stale.exists()
-    assert live.exists()
+    leftovers = [cache / f"0123456789abcdef.jsa.{pid}.tmp" for pid in (gone.pid, os.getppid())]
+    for path in leftovers:
+        path.write_bytes(b"x")
+    dump = jvm_launch(environ)[2]
+    assert not any(path.exists() for path in leftovers)
+    with open(dump.tmp, "wb") as fh:
+        fh.write(b"x")
+    assert jvm_launch(environ) == ({}, None, None)
+    assert os.path.exists(dump.tmp)
+    dump.finish(1)
 
 
 CORRUPT_ARCHIVE_CHILD = """
+import json
 import sys
 
+from sparklda.io import synth_docs
 from sparklda.session import get_spark
+from sparklda.text import vocab_from_docs
 
 spark = get_spark()
 jvm_args = list(spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
 assert f"-XX:SharedArchiveFile={sys.argv[1]}" in jvm_args, jvm_args
-assert spark.range(3).count() == 3
+rows = vocab_from_docs(synth_docs(spark, 300, 10, 500, 3), 100).collect()
+assert sorted(map(list, rows)) == json.loads(sys.argv[2])
 """
 
 
-def test_fresh_session_starts_over_a_corrupt_archive(tmp_path):
+def test_fresh_session_starts_over_a_corrupt_archive(spark, tmp_path):
     """The JVM maps whatever file sits at the archive path. One of random
     bytes must start the JVM plain, without a word on stdout, which is
-    ``bench.py``'s one-JSON-line channel."""
-    environ = dict(os.environ, HOME=str(tmp_path))
+    ``bench.py``'s one-JSON-line channel. The child also runs at
+    ``local[1]`` over 3 input partitions, and must get the rows this
+    session gets over 64 for the width test's corpus, whose cutoff falls
+    inside a count tie: the rows depend on no core count. ``get_spark``
+    keeps a running session's master, so only a fresh process can check
+    that. (On a 4-vCPU host, 64 partitions cost the cold child about 1.8 s
+    more than 3.)"""
+    rows = vocab_from_docs(synth_docs(spark, 300, 10, 500, 64), 100).collect()
+    environ = dict(os.environ, HOME=str(tmp_path), SPARK_GRAFT_CPUS="1")
     archive = archive_path(environ)
     os.makedirs(os.path.dirname(archive))
     noise = random.Random(7).randbytes(1 << 20)
     with open(archive, "wb") as fh:
         fh.write(noise)
     child = subprocess.run(
-        [sys.executable, "-c", CORRUPT_ARCHIVE_CHILD, archive],
+        [sys.executable, "-c", CORRUPT_ARCHIVE_CHILD, archive, json.dumps(sorted(map(list, rows)))],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         env=environ,
         capture_output=True,
