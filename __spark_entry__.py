@@ -5,6 +5,14 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
+A declared query brings three things: its ``queries()`` entry, its
+``oracle_sql()`` entry, and ``plans/<name>.txt``, written by
+``python -m sparklda.plan SF_DIR``. ``tests/test_vocab.py`` derives the
+query's checks from these three, by name: its rows, column names and types
+against DuckDB on the sf0.001 and sf0.01 fixtures, and its plan against the
+snapshot. A ``queries()`` entry that lacks either of the other two, or a
+snapshot with no ``queries()`` entry, fails a test.
+
 The query code lives in ``sparklda.text``. ``VOCAB_SIZE`` is imported for
 ``oracle_sql``. ``vocab_from_docs`` stays importable from here because the
 paired benchmark (``perfbench/run.py`` and its event-log test) imports it

@@ -1,9 +1,12 @@
-"""Tests for the declared vocab_topv query.
+"""Tests for the declared queries and the vocabulary they build.
 
-Covers: equivalence with the DuckDB oracle SQL, on the fixtures (through the
-contract's ``oracle_sql()``), on generated corpora and on odd text; and the
-plan shape that keeps the query scale-safe — top-V is taken *before* any
-single-partition rank, so the window never sees more than VOCAB_SIZE rows.
+Every ``__spark_entry__.queries()`` entry gets, by name, the checks that its
+``oracle_sql()`` entry and its ``plans/<name>.txt`` define: its rows, column
+names and types against DuckDB on the sf0.001 and sf0.01 fixtures, and its
+plan against the snapshot. The rest covers ``vocab_topv`` and
+``vocab_from_docs``: the DuckDB oracle on generated corpora and on odd text,
+and the plan shape that keeps the query scale-safe — top-V is taken *before*
+any single-partition rank, so the window never sees more than VOCAB_SIZE rows.
 """
 
 from __future__ import annotations
@@ -37,33 +40,31 @@ def _duckdb(documents, sql):
     return con.execute(sql).fetchall()
 
 
-def _fixture_oracle(sf_dir):
+def _fixture_oracle(spark, sf_dir, name):
+    """DuckDB's result for ``oracle_sql()[name]`` on a fixture, as a DataFrame,
+    so that ``assertDataFrameEqual`` compares column names and types as well
+    as rows (it skips the schema when either side is a list of rows)."""
+    con = duckdb.connect()
     # pyarrow reads the fixture, so the oracle does not depend on Spark's reader
-    return _duckdb(pq.read_table(f"{sf_dir}/documents.parquet"), entry_mod.oracle_sql()["vocab_topv"])
+    con.register("documents", pq.read_table(f"{sf_dir}/documents.parquet"))
+    return spark.createDataFrame(con.sql(entry_mod.oracle_sql()[name]).arrow())
 
 
-def test_vocab_topv_matches_duckdb_oracle(spark):
-    """The declared query against the oracle SQL the contract declares for it."""
-    assert entry_mod.queries().keys() == entry_mod.oracle_sql().keys()
-    assertDataFrameEqual(_vocab_topv(spark), _fixture_oracle(SF_DIR))
+@pytest.mark.parametrize("sf_dir", [SF_DIR, ORACLE_SF_DIR], ids=os.path.basename)
+@pytest.mark.parametrize("name", entry_mod.queries())
+def test_declared_query_matches_duckdb_oracle(spark, name, sf_dir):
+    """Each declared query against the oracle SQL the contract declares for
+    it, at sf0.01 too, the scale the driver grades."""
+    assertDataFrameEqual(entry_mod.queries()[name](spark, sf_dir), _fixture_oracle(spark, sf_dir, name))
 
 
 def test_entry_reads_sf_dir_from_env(spark, monkeypatch):
     """``entry`` is the smoke query; it reads ``$SPARK_GRAFT_SF_DIR``. Its
     rows at sf0.01 differ from those at the default sf0.001 in their counts."""
     monkeypatch.setenv("SPARK_GRAFT_SF_DIR", ORACLE_SF_DIR)
-    oracle = _fixture_oracle(ORACLE_SF_DIR)
-    assert sorted(oracle) != sorted(_fixture_oracle(SF_DIR))
+    oracle = _fixture_oracle(spark, ORACLE_SF_DIR, "vocab_topv")
+    assert sorted(oracle.collect()) != sorted(_fixture_oracle(spark, SF_DIR, "vocab_topv").collect())
     assertDataFrameEqual(entry_mod.entry(spark), oracle)
-
-
-def test_vocab_topv_schema(spark):
-    df = _vocab_topv(spark)
-    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
-        ("word", "string"),
-        ("count", "bigint"),
-        ("id", "bigint"),
-    ]
 
 
 @pytest.mark.parametrize("vocab_size", [0, -1, 2.5, True, "10", 2**31 - 16, 2**31])
@@ -93,11 +94,16 @@ def test_vocab_from_docs_leaves_no_temp_view(spark):
     assert views() == []
 
 
-def test_vocab_topv_plan_matches_snapshot(spark):
+@pytest.mark.parametrize("name", entry_mod.queries())
+def test_declared_query_plan_matches_snapshot(spark, name):
     """The whole physical plan, including what the operator guards below do
-    not pin, such as the 200-way hashpartitioning(word) Exchange. Regenerate
-    the snapshot with ``python -m sparklda.plan SF_DIR``."""
-    assert plan_text(_vocab_topv(spark)) == (PLANS_DIR / "vocab_topv.txt").read_text()
+    not pin, such as the width of a hashpartitioning Exchange.
+    Every declared query has an oracle and a snapshot, and every snapshot a
+    declared query. Regenerate the snapshots with
+    ``python -m sparklda.plan SF_DIR``."""
+    queries = entry_mod.queries()
+    assert {p.stem for p in PLANS_DIR.glob("*.txt")} == queries.keys() == entry_mod.oracle_sql().keys()
+    assert plan_text(queries[name](spark, SF_DIR)) == (PLANS_DIR / f"{name}.txt").read_text()
 
 
 def test_vocab_topv_plan_is_scale_safe(spark):
@@ -190,14 +196,16 @@ ODD_TEXT_WORDS = 6
 
 @pytest.mark.parametrize(
     ("texts", "v"),
-    [(ODD_TEXT, ODD_TEXT_WORDS + 1), ([], 10), (ODD_TEXT, 1), (ODD_TEXT, ODD_TEXT_WORDS)],
-    ids=["odd-text", "empty-corpus", "v=1", "v=d"],
+    [([], 10), (ODD_TEXT, 1)] + [(ODD_TEXT, ODD_TEXT_WORDS + k) for k in (1, 0, -1)],
+    ids=["empty-corpus", "v=1", "odd-text", "v=d", "v=d-1"],
 )
 def test_vocab_odd_text_matches_oracle(spark, texts, v):
     """Null, empty and all-space text, double, leading and trailing spaces,
     tabs (not separators) and mixed case (kept apart), and a corpus with no
     documents: Spark's rows are DuckDB's. V is one past the d distinct words,
-    exactly d, and 1, where the cutoff splits the a/b tie."""
+    exactly d, 1, where the cutoff splits the a/b tie, and d - 1, where it
+    falls inside the count-1 tie and keeps "\\tA", "A" and "B" but not
+    "a\\tb": the byte order of tab, upper and lower case decides the cut."""
     docs = spark.createDataFrame([(t,) for t in texts], "text string")
     oracle = _duckdb(docs.toArrow(), vocab_oracle_sql(v))
     assert len(oracle) == min(v, ODD_TEXT_WORDS if texts else 0)
